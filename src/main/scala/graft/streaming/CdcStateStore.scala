@@ -124,4 +124,12 @@ object CdcCheckpoints {
         store.put(r.getLong(0), StreamProgress(r.getLong(1), r.getLong(2), r.getLong(3)))
       }
   }
+
+  /** [[record]] for a batch already collected to the driver: the same
+    * per-stream maxima, taken from the rows instead of another job. */
+  def recordRows(rows: Iterable[CdcStreamConsumer.Delivered], store: CdcStateStore): Unit =
+    rows.groupBy(_.streamId).foreach { case (sid, ds) =>
+      val last = ds.maxBy(d => (d.timeUs, d.eventId, d.seqNo))
+      store.put(sid, StreamProgress(last.timeUs, last.eventId, last.seqNo))
+    }
 }

@@ -104,9 +104,15 @@ final class GraftCdcConsumerBuilder private[streaming] (spark: SparkSession) {
   def withConsumer(c: Delivered => Unit): this.type = { consumer = c; consumerSet = true; this }
 
   /** Executor-side delivery (the 100 TB path): the function runs ONCE
-    * PER PARTITION ON THE EXECUTORS, each partition carrying complete
-    * streams in (streamId, seqNo) order — no driver round-trip.
-    * Mutually exclusive with the driver-side withConsumer callback. */
+    * PER PARTITION ON THE EXECUTORS, with no driver round-trip.
+    * Ordering contract, per micro-batch: all of a stream's changes
+    * reach exactly one call, as one contiguous, ascending seqNo run,
+    * and each call's iterator is sorted by (streamId, seqNo). The
+    * partitions are the stateful operator's own (the session's
+    * `spark.sql.shuffle.partitions` when the checkpoint was created),
+    * so delivery adds no shuffle. A retried batch or task replays its
+    * calls (at-least-once). Mutually exclusive with the driver-side
+    * withConsumer callback. */
   def withPartitionConsumer(c: Iterator[Delivered] => Unit): this.type = {
     partitionConsumer = Some(c); this
   }
@@ -465,12 +471,18 @@ final class GraftCdcConsumer private[streaming] (
       try {
         pc match {
           case Some(sink) =>
-            // executor-side: complete streams per partition, ordered —
-            // per-stream order holds because the hash repartition puts a
-            // stream's rows in one partition and the sort orders them
-            batch.repartition(col("streamId"))
-              .sortWithinPartitions(col("streamId"), col("seqNo"))
+            // executor-side: complete streams per partition, ordered,
+            // with no shuffle of its own. The stateful operator already
+            // hash-partitions the batch by streamId and calls the group
+            // function at most once per stream per batch (data or
+            // watermark timeout), emitting that stream's run in seqNo
+            // order; foreachBatch hands its output over with that
+            // partitioning intact. Timed-out groups follow the data
+            // groups unsorted, so the in-partition sort (no exchange)
+            // restores the (streamId, seqNo) contract.
+            batch.sortWithinPartitions(col("streamId"), col("seqNo"))
               .foreachPartition((it: Iterator[Delivered]) => sink(it))
+            stateStore.foreach(s => CdcCheckpoints.record(batch, s))
           case None =>
             // driver-side compatibility path (reference single-JVM
             // RawChangeConsumer): ordered collect + callback. With an
@@ -528,8 +540,11 @@ final class GraftCdcConsumer private[streaming] (
                 }
               case None => fresh.foreach(cb)
             }
+            // high-water marks from the rows already on the driver: a
+            // Dataset-side record would run a second job that
+            // recomputes the batch's stateful stage
+            stateStore.foreach(s => CdcCheckpoints.recordRows(rows, s))
         }
-        stateStore.foreach(s => CdcCheckpoints.record(batch, s))
         done = true
       } catch {
         case e: Throwable if scala.util.control.NonFatal(e) &&

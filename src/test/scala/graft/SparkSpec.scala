@@ -12,6 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the checkpoint file manager Sessions.builder ships, so every
+    // checkpointing spec runs the shipped commit path
+    .config(Sessions.CheckpointFileManagerConf._1, Sessions.CheckpointFileManagerConf._2)
     .appName(getClass.getSimpleName)
     .getOrCreate()
 

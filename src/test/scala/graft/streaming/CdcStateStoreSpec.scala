@@ -148,6 +148,65 @@ class CdcStateStoreSpec extends SparkSpec {
     assert(SinkCollector.q.asScala.count(_.streamId == 1) == 3)
   }
 
+  test("driver path records the store from the collected rows: same marks, no extra job") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the in-driver reduction equals the Dataset one, ties included
+    val sample = Seq(
+      Delivered(1, ms(10), 1, 2, 0.0, 1), Delivered(1, ms(10), 3, 1, 0.0, 2),
+      Delivered(1, ms(10), 3, 1, 0.0, 4), Delivered(1, ms(5), 9, 1, 0.0, 7),
+      Delivered(2, ms(1), 1, 3, 0.0, 1))
+    val fromRows = new InMemoryStateStore
+    val fromJob = new InMemoryStateStore
+    CdcCheckpoints.recordRows(sample, fromRows)
+    CdcCheckpoints.record(sample.toDS(), fromJob)
+    assert(fromRows.all() == fromJob.all())
+    assert(fromRows.get(1L).contains(StreamProgress(ms(10), 3L, 4L)))
+
+    /** Runs the callback consumer over three batches, each releasing
+      * the one before; returns what it delivered and the jobs each data
+      * micro-batch ran. */
+    def run(store: Option[CdcStateStore]): (Seq[Delivered], Seq[Int]) = {
+      val jobs = new BatchJobs
+      spark.sparkContext.addSparkListener(jobs)
+      val in = MemoryStream[Change]
+      val out = new ConcurrentLinkedQueue[Delivered]()
+      val b = GraftCdcConsumer.builder(spark)
+        .withSource(in.toDS())
+        .withConsumer(out.add(_))
+        .withQueryTimeWindowSizeMs(100)
+        .withQueryName(s"store_jobs_${System.nanoTime()}")
+      val c = store.fold(b)(b.withStateStore).build()
+      try {
+        c.start()
+        for (k <- 1 to 3) {
+          in.addData((1 to 12).map(i => Change(i % 6L, ms(k * 100000L + i), k * 100L + i, 2, 0.0)))
+          c.processAllAvailable()
+        }
+        jobs.drain(spark.sparkContext)
+        val q = c.queries.head
+        val per = jobs.perBatch(q.id.toString)
+        val data = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+        (out.asScala.toSeq, data.map(b => per.get(b).fold(0)(_._1)))
+      } finally {
+        c.stop()
+        spark.sparkContext.removeSparkListener(jobs)
+      }
+    }
+    val store = new InMemoryStateStore
+    val (delivered, jobsWithStore) = run(Some(store))
+    val (_, jobsWithout) = run(None)
+    // the store costs no job: one collect per batch either way
+    assert(jobsWithStore == Seq(1, 1, 1), jobsWithStore)
+    assert(jobsWithout == jobsWithStore)
+    // and holds exactly what the Dataset-side record makes of the same rows
+    assert(delivered.size == 24)
+    val want = new InMemoryStateStore
+    CdcCheckpoints.record(delivered.toDS(), want)
+    assert(store.all() == want.all())
+    assert(store.all().size == 6)
+  }
+
   test("two sources run under one lifecycle with independent checkpoints") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -8,6 +8,20 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
+/** Partition-consumer calls, recorded executor-side (a per-JVM object,
+  * so local-mode tasks reach it): the micro-batch, the partition, and
+  * the (streamId, seqNo) sequence each call received. */
+object PartitionCalls {
+  final case class Call(batchId: Long, partition: Int, rows: Vector[(Long, Long)])
+  val q = new ConcurrentLinkedQueue[Call]()
+
+  def record(it: Iterator[Delivered]): Unit = {
+    val tc = org.apache.spark.TaskContext.get()
+    q.add(Call(tc.getLocalProperty("streaming.sql.batchId").toLong, tc.partitionId(),
+      it.map(d => (d.streamId, d.seqNo)).toVector))
+  }
+}
+
 /** Spec for [[GraftCdcConsumer]] — the user-facing builder API
   * (reference: scylla-cdc-lib CDCConsumer.builder()).
   *
@@ -638,6 +652,97 @@ class GraftCdcConsumerSpec extends SparkSpec {
       c.processAllAvailable()
     } finally c.stop()
     assert(received.asScala.count(_.streamId == 6) == 1)
+  }
+
+  test("partition consumer: per batch, each stream reaches one call as a contiguous sorted run") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4") // 4 state partitions
+    PartitionCalls.q.clear()
+    val input = MemoryStream[Change]
+    val c = GraftCdcConsumer.builder(spark)
+      .withSource(input.toDS())
+      .withPartitionConsumer(PartitionCalls.record)
+      .withQueryTimeWindowSizeMs(100)
+      .withQueryName(s"spec_partcalls_${System.nanoTime()}")
+      .build()
+    // Without no-data micro-batches, one batch releases some streams
+    // through their data call and others through the watermark
+    // timeout, so a partition's output interleaves both.
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val streams = 0L until 24L
+    def step(cs: Seq[Change]): Unit = { input.addData(cs); c.processAllAvailable() }
+    try {
+      try c.start() finally spark.conf.unset(noData)
+      // batch 0: four changes per stream, out of ChangeId order, and a
+      // nudge that moves the watermark past them; all are buffered
+      step(streams.flatMap(s => Seq(3, 1, 4, 2).map(i => Change(s, ms(i), s * 100 + i, 2, 0.0))) :+
+        Change(99, ms(100000), 9900, 2, 0.0))
+      // batch 1: data for half the streams releases their four by the
+      // data call; the other half's four go out by timeout
+      step(streams.take(12).map(s => Change(s, ms(100001), s * 100 + 5, 2, 0.0)))
+      // batch 2 moves the watermark; batch 3 releases batch 1's changes
+      // and the first nudge by timeout while new data stays buffered
+      step(Seq(Change(99, ms(200000), 9901, 2, 0.0)))
+      step(streams.slice(12, 18).map(s => Change(s, ms(200001), s * 100 + 6, 2, 0.0)))
+    } finally c.stop()
+
+    val calls = PartitionCalls.q.asScala.toSeq.filter(_.rows.nonEmpty)
+    // every call's iterator is sorted by (streamId, seqNo)
+    calls.foreach(call => assert(call.rows == call.rows.sorted, s"unsorted call: $call"))
+    // each (batch, stream) is one call, holding a contiguous seqNo run
+    val runs = calls.flatMap(call => call.rows.map(r => ((call.batchId, r._1), (call, r._2))))
+      .groupBy(_._1)
+    runs.foreach { case ((b, sid), xs) =>
+      assert(xs.map(_._2._1).distinct.size == 1, s"batch $b stream $sid split over calls")
+      val seqs = xs.map(_._2._2)
+      assert(seqs == (seqs.head until seqs.head + seqs.size), s"batch $b stream $sid: $seqs")
+    }
+    // across batches, exactly once: each stream's seqNos run 1..n
+    val delivered = calls.flatMap(_.rows).groupBy(_._1).map { case (sid, rs) => sid -> rs.map(_._2).sorted }
+    assert(delivered.keySet == streams.toSet + 99L)
+    streams.foreach(s => assert(delivered(s) == (1L to (if (s < 12) 5L else 4L)), s"stream $s"))
+    assert(delivered(99L) == Seq(1L))
+    // the released batch really spread over partitions, several streams each
+    val batch1 = calls.filter(_.batchId == calls.map(_.batchId).min)
+    assert(batch1.map(_.partition).distinct.size > 1, batch1)
+    assert(batch1.exists(_.rows.map(_._1).distinct.size > 1), batch1)
+  }
+
+  test("plan shape: a partition-consumer data micro-batch runs 1 job of 2 stages") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
+    val input = MemoryStream[Change]
+    val c = GraftCdcConsumer.builder(spark)
+      .withSource(input.toDS())
+      .withPartitionConsumer(_.foreach(_ => ()))
+      .withQueryTimeWindowSizeMs(100)
+      .withQueryName(s"spec_planshape_${System.nanoTime()}")
+      .build()
+    try {
+      c.start()
+      for (k <- 1 to 3) {
+        input.addData((1 to 20).map(i => Change(i % 8L, ms(k * 100000L + i), k * 100L + i, 2, 0.0)))
+        c.processAllAvailable()
+      }
+      jobs.drain(spark.sparkContext)
+      val q = c.queries.head
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      val per = jobs.perBatch(q.id.toString)
+      assert(dataBatches.length == 3)
+      // stage 1 reads the source and shuffles into the state store;
+      // stage 2 runs the stateful operator, the sort and the sink. A
+      // third stage means delivery shuffles again.
+      dataBatches.foreach { b =>
+        assert(per.get(b).contains((1, 2)), s"batch $b ran (jobs, stages) = ${per.get(b)}")
+      }
+    } finally {
+      c.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
   }
 
   test("stop is idempotent and close delegates to stop") {
