@@ -50,10 +50,7 @@ object Sessions {
       // 9 of 12 entries faster, none outside noise slower. The AQE
       // threshold additionally lets runtime stats rewrite an SMJ to
       // SHJ when every post-shuffle partition is under 64 MB.
-      // SPARK_GRAFT_PREFER_SMJ=1 flips the default back for A/B probes
-      // (the r14 sf1 spill check) — the shipped default is unchanged.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1").toString)
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS); the vectorized reader

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import CdcStreamConsumer.{HasChangeId, freshInOrder}
+
 /** Streaming replication of a non-frozen collection column — the
   * stateful twin of the batch epoch fold in
   * [[graft.cdc.CdcOps.collectionApplyFromLog]], with identical
@@ -25,7 +27,7 @@ object CdcCollectionConsumer {
     * in the CDC log: overwrite=true → replace with `put`;
     * `del` non-empty → remove those keys; else merge `put`). */
   case class CollChange(userId: Long, timeUs: Long, eventId: Long,
-      put: Map[Int, Double], del: Seq[Int], overwrite: Boolean)
+      put: Map[Int, Double], del: Seq[Int], overwrite: Boolean) extends HasChangeId
 
   /** Per-key state: checkpoint + the live collection. */
   case class CollState(lastTimeUs: Long, lastEventId: Long,
@@ -36,18 +38,12 @@ object CdcCollectionConsumer {
   case class CollSnapshot(userId: Long, timeUs: Long, eventId: Long,
       applied: Long, entries: Map[Int, Double])
 
-  private def isAfter(c: CollChange, s: CollState): Boolean =
-    c.timeUs > s.lastTimeUs || (c.timeUs == s.lastTimeUs && c.eventId > s.lastEventId)
-
   /** Apply one micro-batch's changes for a key: ChangeId order,
     * checkpoint dedupe, fold, snapshot per applied change. */
   def applyGroup(userId: Long, changes: Iterator[CollChange],
       state: GroupState[CollState]): Iterator[CollSnapshot] = {
     var s = state.getOption.getOrElse(CollState(Long.MinValue, Long.MinValue, 0L, Map.empty))
-    val ordered = changes.toSeq
-      .filter(isAfter(_, s))
-      .distinctBy(c => (c.timeUs, c.eventId))
-      .sortBy(c => (c.timeUs, c.eventId))
+    val ordered = freshInOrder(changes, s.lastTimeUs, s.lastEventId)
     val out = ordered.map { c =>
       val entries =
         if (c.overwrite) c.put                       // whole-cell tombstone + new value
@@ -79,7 +75,7 @@ object CdcCollectionConsumer {
     * SET l[i]; `del` names victim timeuuids; overwrite is the
     * whole-cell tombstone + `put` as the replacement entries. */
   case class ListChange(userId: Long, timeUs: Long, eventId: Long,
-      put: Map[Long, Double], del: Seq[Long], overwrite: Boolean)
+      put: Map[Long, Double], del: Seq[Long], overwrite: Boolean) extends HasChangeId
 
   case class ListState(lastTimeUs: Long, lastEventId: Long,
       applied: Long, entries: Map[Long, Double])
@@ -90,16 +86,10 @@ object CdcCollectionConsumer {
   case class ListSnapshot(userId: Long, timeUs: Long, eventId: Long,
       applied: Long, items: Seq[Double])
 
-  private def isAfterL(c: ListChange, s: ListState): Boolean =
-    c.timeUs > s.lastTimeUs || (c.timeUs == s.lastTimeUs && c.eventId > s.lastEventId)
-
   def applyListGroup(userId: Long, changes: Iterator[ListChange],
       state: GroupState[ListState]): Iterator[ListSnapshot] = {
     var s = state.getOption.getOrElse(ListState(Long.MinValue, Long.MinValue, 0L, Map.empty))
-    val ordered = changes.toSeq
-      .filter(isAfterL(_, s))
-      .distinctBy(c => (c.timeUs, c.eventId))
-      .sortBy(c => (c.timeUs, c.eventId))
+    val ordered = freshInOrder(changes, s.lastTimeUs, s.lastEventId)
     val out = ordered.map { c =>
       val entries =
         if (c.overwrite) c.put
@@ -128,16 +118,13 @@ object CdcCollectionConsumer {
     * replaces the whole cell with exactly this change's fields. */
   case class UdtChange(userId: Long, timeUs: Long, eventId: Long,
       f0: Option[Double], f1: Option[Long], f2: Option[String],
-      delIdx: Seq[Int], overwrite: Boolean)
+      delIdx: Seq[Int], overwrite: Boolean) extends HasChangeId
 
   case class UdtState(lastTimeUs: Long, lastEventId: Long, applied: Long,
       f0: Option[Double], f1: Option[Long], f2: Option[String])
 
   case class UdtSnapshot(userId: Long, timeUs: Long, eventId: Long,
       applied: Long, f0: Option[Double], f1: Option[Long], f2: Option[String])
-
-  private def isAfterU(c: UdtChange, s: UdtState): Boolean =
-    c.timeUs > s.lastTimeUs || (c.timeUs == s.lastTimeUs && c.eventId > s.lastEventId)
 
   private def fold[T](prev: Option[T], next: Option[T], deleted: Boolean): Option[T] =
     if (next.isDefined) next else if (deleted) None else prev
@@ -146,10 +133,7 @@ object CdcCollectionConsumer {
       state: GroupState[UdtState]): Iterator[UdtSnapshot] = {
     var s = state.getOption.getOrElse(
       UdtState(Long.MinValue, Long.MinValue, 0L, None, None, None))
-    val ordered = changes.toSeq
-      .filter(isAfterU(_, s))
-      .distinctBy(c => (c.timeUs, c.eventId))
-      .sortBy(c => (c.timeUs, c.eventId))
+    val ordered = freshInOrder(changes, s.lastTimeUs, s.lastEventId)
     val out = ordered.map { c =>
       val (p0, p1, p2) =
         if (c.overwrite) (None, None, None) else (s.f0, s.f1, s.f2)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import CdcStreamConsumer.Delivered
+import CdcStreamConsumer.{Delivered, isAfter}
 
 /** Kafka-ready projection of delivered changes — the essence of the
   * reference's scylla-cdc-kafka-connect module (a source connector
@@ -70,9 +70,6 @@ object CdcKafkaSink {
     * producing query; the change id is globally stable). */
   def resumeAfter(changes: Dataset[Delivered],
       marks: Map[Long, (Long, Long)]): Dataset[Delivered] =
-    changes.filter { d =>
-      marks.get(d.streamId).forall { case (t, e) =>
-        d.timeUs > t || (d.timeUs == t && d.eventId > e)
-      }
-    }
+    changes.filter(d =>
+      marks.get(d.streamId).forall { case (t, e) => isAfter(d.timeUs, d.eventId, t, e) })
 }

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
-import CdcStreamConsumer.StreamProgress
+import CdcStreamConsumer.{StreamProgress, isAfter}
 
 /** External checkpoint store for per-stream consumer progress — the
   * analogue of the reference's pluggable `CDCStateStore`
@@ -109,8 +109,17 @@ object CdcCheckpoints {
 
   import org.apache.spark.sql.Dataset
 
-  /** Record a micro-batch's high-water marks into the store — one
-    * store write per stream per batch (the newest delivered change).
+  /** Put `p` only if it is after the stream's stored mark, which so
+    * never moves backwards — a fresh checkpoint resumed against a
+    * populated store redelivers changes the store already passed. */
+  private def advance(store: CdcStateStore, streamId: Long, p: StreamProgress): Unit =
+    if (store.get(streamId).forall(m =>
+        isAfter(p.lastTimeUs, p.lastEventId, m.lastTimeUs, m.lastEventId)))
+      store.put(streamId, p)
+
+  /** Record a micro-batch's high-water marks into the store — at most
+    * one store write per stream per batch ([[advance]] to the newest
+    * delivered change).
     * The reduction happens in Spark (tiny groupBy on the batch);
     * only the per-stream maxima reach the driver-side store, so the
     * call is O(streams-in-batch), not O(changes). */
@@ -121,7 +130,7 @@ object CdcCheckpoints {
       .select(col("streamId"), col("last.timeUs"), col("last.eventId"), col("last.seqNo"))
       .collect()
       .foreach { r =>
-        store.put(r.getLong(0), StreamProgress(r.getLong(1), r.getLong(2), r.getLong(3)))
+        advance(store, r.getLong(0), StreamProgress(r.getLong(1), r.getLong(2), r.getLong(3)))
       }
   }
 
@@ -130,6 +139,6 @@ object CdcCheckpoints {
   def recordRows(rows: Iterable[CdcStreamConsumer.Delivered], store: CdcStateStore): Unit =
     rows.groupBy(_.streamId).foreach { case (sid, ds) =>
       val last = ds.maxBy(d => (d.timeUs, d.eventId, d.seqNo))
-      store.put(sid, StreamProgress(last.timeUs, last.eventId, last.seqNo))
+      advance(store, sid, StreamProgress(last.timeUs, last.eventId, last.seqNo))
     }
 }

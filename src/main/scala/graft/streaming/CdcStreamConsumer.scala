@@ -28,9 +28,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object CdcStreamConsumer {
 
+  /** Anything addressed by a CDC ChangeId (timeUs, eventId). */
+  trait HasChangeId { def timeUs: Long; def eventId: Long }
+
   /** One CDC change addressed by (streamId, ChangeId=(timeUs, eventId)). */
   case class Change(streamId: Long, timeUs: Long, eventId: Long,
-      operation: Int, value: Double)
+      operation: Int, value: Double) extends HasChangeId
 
   /** Per-stream checkpoint state: the reference's lastConsumedChangeId. */
   case class StreamProgress(lastTimeUs: Long, lastEventId: Long, delivered: Long)
@@ -39,29 +42,42 @@ object CdcStreamConsumer {
   case class Delivered(streamId: Long, timeUs: Long, eventId: Long,
       operation: Int, value: Double, seqNo: Long)
 
-  private def isAfter(c: Change, p: StreamProgress): Boolean =
-    c.timeUs > p.lastTimeUs || (c.timeUs == p.lastTimeUs && c.eventId > p.lastEventId)
+  /** ChangeId order, the one rule behind every "newer than the mark"
+    * test in graft.streaming: change id (timeUs, eventId) comes
+    * strictly after (lastTimeUs, lastEventId) — time first, the event
+    * id breaking ties. */
+  private[streaming] def isAfter(timeUs: Long, eventId: Long,
+      lastTimeUs: Long, lastEventId: Long): Boolean =
+    timeUs > lastTimeUs || (timeUs == lastTimeUs && eventId > lastEventId)
+
+  /** One group's changes after the mark (lastTimeUs, lastEventId), each
+    * change id once, in ChangeId order. */
+  private[streaming] def freshInOrder[C <: HasChangeId](changes: Iterator[C],
+      lastTimeUs: Long, lastEventId: Long): Seq[C] =
+    changes.toSeq
+      .filter(c => isAfter(c.timeUs, c.eventId, lastTimeUs, lastEventId))
+      .distinctBy(c => (c.timeUs, c.eventId))
+      .sortBy(c => (c.timeUs, c.eventId))
 
   /** Deliver one micro-batch's changes for a stream: sort to ChangeId
-    * order, drop anything at or before the checkpoint (duplicates /
-    * replays), advance the checkpoint. */
+    * order, drop anything at or before the checkpoint (replays) and
+    * any second copy within the batch (duplicates), advance the
+    * checkpoint. */
   def deliverGroup(streamId: Long, changes: Iterator[Change],
       state: GroupState[StreamProgress]): Iterator[Delivered] = {
     val progress = state.getOption.getOrElse(StreamProgress(Long.MinValue, Long.MinValue, 0L))
-    val ordered = changes.toSeq
-      .filter(isAfter(_, progress))
-      .sortBy(c => (c.timeUs, c.eventId))
-    if (ordered.isEmpty) Iterator.empty
-    else {
-      val out = ordered.zipWithIndex.map { case (c, i) =>
-        Delivered(c.streamId, c.timeUs, c.eventId, c.operation, c.value,
-          progress.delivered + i + 1)
-      }
-      val lastC = ordered.last
-      state.update(StreamProgress(lastC.timeUs, lastC.eventId, progress.delivered + ordered.size))
-      out.iterator
-    }
+    val ordered = freshInOrder(changes, progress.lastTimeUs, progress.lastEventId)
+    ordered.lastOption.foreach(l =>
+      state.update(StreamProgress(l.timeUs, l.eventId, progress.delivered + ordered.size)))
+    stamp(ordered, progress.delivered)
   }
+
+  /** Changes in ChangeId order as deliveries, seqNos continuing after
+    * the stream's `delivered` count. */
+  private def stamp(ordered: Seq[Change], delivered: Long): Iterator[Delivered] =
+    ordered.iterator.zipWithIndex.map { case (c, i) =>
+      Delivered(c.streamId, c.timeUs, c.eventId, c.operation, c.value, delivered + i + 1)
+    }
 
   /** Wire a streaming Dataset of raw changes into ordered per-stream
     * delivery. Append-mode output; pair with
@@ -114,22 +130,17 @@ object CdcStreamConsumer {
       state: GroupState[BufferedProgress]): Iterator[Delivered] = {
     val p = state.getOption.getOrElse(
       BufferedProgress(Long.MinValue, Long.MinValue, 0L, Nil))
-    val progress = StreamProgress(p.lastTimeUs, p.lastEventId, p.delivered)
     val watermarkMs = state.getCurrentWatermarkMs()
     val watermarkUs = watermarkMs * 1000L
     // dedupe replays against BOTH the checkpoint and the buffer — an
     // at-least-once source can redeliver a change while its original
     // is still waiting out the confidence window
     val fresh = (p.pending ++ changes)
-      .filter(isAfter(_, progress))
+      .filter(c => isAfter(c.timeUs, c.eventId, p.lastTimeUs, p.lastEventId))
       .distinctBy(c => (c.timeUs, c.eventId))
     // watermark 0 = not yet established → everything stays buffered
     val (ready, hold) = fresh.partition(c => watermarkUs > 0 && c.timeUs <= watermarkUs)
     val ordered = ready.sortBy(c => (c.timeUs, c.eventId))
-    val out = ordered.zipWithIndex.map { case (c, i) =>
-      Delivered(c.streamId, c.timeUs, c.eventId, c.operation, c.value,
-        p.delivered + i + 1)
-    }
     val newProgress = ordered.lastOption match {
       case Some(lastC) => BufferedProgress(lastC.timeUs, lastC.eventId,
         p.delivered + ordered.size, hold)
@@ -142,7 +153,7 @@ object CdcStreamConsumer {
       val wakeAtMs = math.max(hold.map(_.timeUs).min / 1000L, watermarkMs) + 1L
       state.setTimeoutTimestamp(wakeAtMs)
     }
-    out.iterator
+    stamp(ordered, p.delivered)
   }
 
   /** [[consume]] with confidence-window buffering. Builds the

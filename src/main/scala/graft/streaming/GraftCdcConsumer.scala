@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import CdcStreamConsumer.{Change, Delivered}
+import CdcStreamConsumer.{Change, Delivered, isAfter}
 
 /** User-facing consumer builder — the Spark-first analogue of the
   * reference's `CDCConsumer.builder()`
@@ -511,8 +511,7 @@ final class GraftCdcConsumer private[streaming] (
                   "or raise withDriverCallbackRowLimit deliberately")
             val fresh = stateStore match {
               case Some(s) => rows.filter(d => s.get(d.streamId).forall(p =>
-                d.timeUs > p.lastTimeUs ||
-                  (d.timeUs == p.lastTimeUs && d.eventId > p.lastEventId)))
+                isAfter(d.timeUs, d.eventId, p.lastTimeUs, p.lastEventId)))
               case None => rows
             }
             // timeline resolution: this table's own controller (tablet

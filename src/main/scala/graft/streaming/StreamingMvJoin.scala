@@ -84,29 +84,15 @@ object StreamingMvJoin {
     val insert = postF.join(affected, Seq("user_id"), "left_semi")
       .join(dimRows(postDim), Seq("segment_id"))
       .select(tierT, lit(1L).as("d_n"), col("cents").as("d_cents"))
-    val delta = retract.unionByName(insert)
-      .groupBy(col("t"))
-      .agg(sum(col("d_n")).as("d_n"), sum(col("d_cents")).as("d_cents"))
-    mv.join(delta, Seq("t"), "full_outer")
-      .select(col("t"),
-        (coalesce(col("n_rows"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n_rows"),
-        (coalesce(col("sum_cents"), lit(0L)) + coalesce(col("d_cents"), lit(0L)))
-          .as("sum_cents"))
-      .filter(col("n_rows") > 0)
+    StreamingMvMaintain.foldDelta(mv, retract.unionByName(insert), "t", "sum_cents")
   }
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
-    * transactional table keyed on `t`). */
-  final class InMemoryMvStore(spark: SparkSession) {
-    @volatile private var current: DataFrame = emptyMv(spark)
-    def read(): DataFrame = current
-    /** The MV as a consumer reads it: (t, n_rows, sum_value). */
-    def readView(): DataFrame = current
-      .select(col("t"), col("n_rows"),
-        (col("sum_cents").cast("double") / 100.0).as("sum_value"))
-      .orderBy(col("t"))
-    def swap(next: DataFrame): Unit = { current = next }
-  }
+    * transactional table keyed on `t`). Its view: (t, n_rows,
+    * sum_value). */
+  final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
+    .select(col("t"), col("n_rows"), (col("sum_cents").cast("double") / 100.0).as("sum_value"))
+    .orderBy(col("t")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame
     * (conforming columns: user_id, event_id, time_us, cdc_operation,

@@ -5,28 +5,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import StreamingMvMaintain.recomputeTouched
+
 /** STREAMING twin of [[graft.cdc.CdcOps.mvMinMaxFromLog]] — the
   * NON-self-maintainable MV (`bucket → COUNT, MIN, MAX`) maintained
   * continuously from the CDC stream. Completes the batch/streaming
   * symmetry [[StreamingMvMaintain]] established for the SUM/COUNT
   * algebra: same composition (the key state IS
-  * [[StreamingSnapshotMerge]]'s idempotent merged snapshot), same
-  * per-batch cost bound, but deletion of a bucket's extremum cannot
-  * be retracted from a delta stream — the runner-up lives only in
-  * the full key state. So per batch the maintainer RECOMPUTES exactly
-  * the touched buckets (the batch operator's answer, CdcOps.scala
+  * [[StreamingSnapshotMerge]]'s idempotent merged snapshot, the body
+  * is its shared [[StreamingSnapshotMerge.attachMv]]), same per-batch
+  * cost bound, but deletion of a bucket's extremum cannot be
+  * retracted from a delta stream — the runner-up lives only in the
+  * full key state. So per batch the maintainer RECOMPUTES exactly the
+  * touched buckets (the batch operator's answer, CdcOps.scala
   * mvMinMaxFromLog) from the POST-merge state and carries every other
-  * MV row untouched: cost O(batch + rows of touched buckets + |MV|),
-  * never O(log) and never a full-state re-aggregation.
-  *
-  * Touched buckets are read from BOTH editions of the merged state —
-  * the pre-merge buckets of the keys the batch touched (the bucket an
-  * extremum is retracted FROM) and their post-merge buckets (the
-  * bucket a write lands IN) — so cross-bucket updates repair both
-  * ends. Because contributions come from the MERGED state, a replayed
-  * or stale batch whose merge is a no-op recomputes touched buckets
-  * to their identical values: the MV inherits the snapshot's
-  * idempotency, exactly like the SUM/COUNT twin. */
+  * MV row untouched ([[StreamingMvMaintain.recomputeTouched]]): cost
+  * O(batch + rows of touched buckets + |MV|), never O(log) and never
+  * a full-state re-aggregation. */
 object StreamingMvMinMax {
 
   val mvSchema: StructType = StructType(Seq(
@@ -38,64 +33,28 @@ object StreamingMvMinMax {
   def emptyMv(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], mvSchema)
 
-  /** Live snapshot rows with their exact-cents bucket (floor
-    * division — the batch operator's `//`-compatible semantics). */
-  private def bucketed(state: DataFrame): DataFrame =
-    state.filter(!col("deleted"))
-      .withColumn("c", (col("value").cast("decimal(18,2)") * 100).cast("long"))
-      .withColumn("bucket",
-        expr(graft.cdc.CdcOps.floorDivSql("c", graft.cdc.CdcOps.MvBucketCents)))
-      .select(col("user_id"), col("bucket"), col("c"))
-
   /** One micro-batch: recompute the touched buckets from the
     * POST-merge state, carry the rest of the MV verbatim. */
   def applyBatch(mv: DataFrame, preState: DataFrame, postState: DataFrame,
-      touched: DataFrame): DataFrame = {
-    val pre = bucketed(preState)
-    val post = bucketed(postState)
-    val touchedBuckets = pre.join(touched, Seq("user_id"), "left_semi")
-      .select(col("bucket"))
-      .unionByName(post.join(touched, Seq("user_id"), "left_semi").select(col("bucket")))
-      .distinct()
-    val recomputed = post.join(touchedBuckets, Seq("bucket"), "left_semi")
-      .groupBy(col("bucket"))
+      touched: DataFrame): DataFrame =
+    recomputeTouched(mv, preState, postState, touched)(_.groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_rows"), min(col("c")).as("mn_cents"),
-        max(col("c")).as("mx_cents"))
-    mv.join(touchedBuckets, Seq("bucket"), "left_anti")
-      .unionByName(recomputed)
-  }
+        max(col("c")).as("mx_cents")))
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
     * transactional table bucketed on `bucket` — the
-    * [[graft.cdc.CdcOps.writeMvSnapshot]] layout). */
-  final class InMemoryMvStore(spark: SparkSession) {
-    @volatile private var current: DataFrame = emptyMv(spark)
-    def read(): DataFrame = current
-    /** The MV as a consumer reads it: (bucket, n_rows, min_value,
-      * max_value). */
-    def readView(): DataFrame = current
-      .select(col("bucket"), col("n_rows"),
-        (col("mn_cents").cast("double") / 100.0).as("min_value"),
-        (col("mx_cents").cast("double") / 100.0).as("max_value"))
-      .orderBy(col("bucket"))
-    def swap(next: DataFrame): Unit = { current = next }
-  }
+    * [[graft.cdc.CdcOps.writeMvSnapshot]] layout). Its view: (bucket,
+    * n_rows, min_value, max_value). */
+  final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
+    .select(col("bucket"), col("n_rows"),
+      (col("mn_cents").cast("double") / 100.0).as("min_value"),
+      (col("mx_cents").cast("double") / 100.0).as("max_value"))
+    .orderBy(col("bucket")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame
     * (conforming columns: user_id, event_id, time_us, cdc_operation,
-    * value, props). Each micro-batch: reduce → merge key state →
-    * touched-bucket recompute from the post-merge state → swap both. */
+    * value, props) through the shared body. */
   def attach(changes: DataFrame, keyStore: StreamingSnapshotMerge.InMemorySnapshotStore,
       mvStore: InMemoryMvStore): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val reduced = StreamingSnapshotMerge.reduceSlice(df).localCheckpoint()
-        val pre = keyStore.read()
-        val post = StreamingSnapshotMerge.mergeReduced(pre, reduced).localCheckpoint()
-        val touched = reduced.select(col("user_id"))
-        mvStore.swap(applyBatch(mvStore.read(), pre, post, touched).localCheckpoint())
-        keyStore.swap(post)
-      }
-      .start()
+    StreamingSnapshotMerge.attachMv(changes, keyStore, mvStore)(applyBatch)
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import StreamingMvMaintain.recomputeTouched
+
 /** STREAMING twin of [[graft.cdc.CdcOps.mvTopkFromLog]] — the TOP-K
   * MV (`bucket → K largest values`) maintained continuously from the
   * CDC stream, completing the MV family's batch/streaming matrix
@@ -16,19 +18,13 @@ import org.apache.spark.sql.types._
   * both ends) and shares its non-self-maintainability: an insert
   * merges into a K-buffer, but a delete of a RANKED value needs the
   * (K+1)-th — which no delta stream carries; it lives only in the
-  * full key state. Same composition as the MIN/MAX twin: the key
-  * state IS [[StreamingSnapshotMerge]]'s idempotent merged snapshot,
-  * and per micro-batch the maintainer RECOMPUTES exactly the touched
-  * buckets' rank lists from the POST-merge state (pre-merge buckets
-  * of touched keys — where a ranked value is retracted FROM — union
-  * their post-merge buckets — where a write lands IN), carrying every
-  * other bucket's rank rows verbatim:
-  * cost O(batch + rows of touched buckets + K·|MV|), never O(log) and
-  * never a full-state re-rank. Because contributions come from the
-  * MERGED state, a replayed or stale batch whose merge is a no-op
-  * recomputes touched buckets to identical rank lists — the MV
-  * inherits the snapshot's idempotency, exactly like its three
-  * siblings. */
+  * full key state. So it shares the MIN/MAX twin's composition too:
+  * the body [[StreamingSnapshotMerge.attachMv]], and per micro-batch
+  * a recompute of exactly the touched buckets' rank lists from the
+  * POST-merge state ([[StreamingMvMaintain.recomputeTouched]]), every
+  * other bucket's rank rows carried verbatim: cost O(batch + rows of
+  * touched buckets + K·|MV|), never O(log) and never a full-state
+  * re-rank. */
 object StreamingMvTopk {
 
   val mvSchema: StructType = StructType(Seq(
@@ -39,67 +35,32 @@ object StreamingMvTopk {
   def emptyMv(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], mvSchema)
 
-  /** Live snapshot rows with their exact-cents bucket (floor
-    * division — the batch operator's `//`-compatible semantics). */
-  private def bucketed(state: DataFrame): DataFrame =
-    state.filter(!col("deleted"))
-      .withColumn("c", (col("value").cast("decimal(18,2)") * 100).cast("long"))
-      .withColumn("bucket",
-        expr(graft.cdc.CdcOps.floorDivSql("c", graft.cdc.CdcOps.MvBucketCents)))
-      .select(col("user_id"), col("bucket"), col("c"))
-
   /** One micro-batch: recompute the touched buckets' rank lists from
     * the POST-merge state, carry the rest of the MV verbatim. The
     * rank tiebreak is the batch operator's (cents DESC, user_id DESC),
     * so maintained and recomputed editions are value-identical. */
   def applyBatch(mv: DataFrame, preState: DataFrame, postState: DataFrame,
       touched: DataFrame): DataFrame = {
-    val pre = bucketed(preState)
-    val post = bucketed(postState)
-    val touchedBuckets = pre.join(touched, Seq("user_id"), "left_semi")
-      .select(col("bucket"))
-      .unionByName(post.join(touched, Seq("user_id"), "left_semi").select(col("bucket")))
-      .distinct()
     val wTk = Window.partitionBy(col("bucket"))
       .orderBy(col("c").desc, col("user_id").desc)
-    val recomputed = post.join(touchedBuckets, Seq("bucket"), "left_semi")
+    recomputeTouched(mv, preState, postState, touched)(_
       .withColumn("rk", row_number().over(wTk))
       .filter(col("rk") <= graft.cdc.CdcOps.MvTopK)
-      .select(col("bucket"), col("rk").cast("long").as("rk"), col("c").as("cents"))
-    mv.join(touchedBuckets, Seq("bucket"), "left_anti")
-      .unionByName(recomputed)
+      .select(col("bucket"), col("rk").cast("long").as("rk"), col("c").as("cents")))
   }
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
     * transactional table bucketed on `bucket` — the
-    * [[graft.cdc.CdcOps.writeMvSnapshot]] layout). */
-  final class InMemoryMvStore(spark: SparkSession) {
-    @volatile private var current: DataFrame = emptyMv(spark)
-    def read(): DataFrame = current
-    /** The MV as a consumer reads it: (bucket, rk, value). */
-    def readView(): DataFrame = current
-      .select(col("bucket"), col("rk"),
-        (col("cents").cast("double") / 100.0).as("value"))
-      .orderBy(col("bucket"), col("rk"))
-    def swap(next: DataFrame): Unit = { current = next }
-  }
+    * [[graft.cdc.CdcOps.writeMvSnapshot]] layout). Its view: (bucket,
+    * rk, value). */
+  final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
+    .select(col("bucket"), col("rk"), (col("cents").cast("double") / 100.0).as("value"))
+    .orderBy(col("bucket"), col("rk")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame
     * (conforming columns: user_id, event_id, time_us, cdc_operation,
-    * value, props). Each micro-batch: reduce → merge key state →
-    * touched-bucket rank recompute from the post-merge state → swap
-    * both. */
+    * value, props) through the shared body. */
   def attach(changes: DataFrame, keyStore: StreamingSnapshotMerge.InMemorySnapshotStore,
       mvStore: InMemoryMvStore): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        val reduced = StreamingSnapshotMerge.reduceSlice(df).localCheckpoint()
-        val pre = keyStore.read()
-        val post = StreamingSnapshotMerge.mergeReduced(pre, reduced).localCheckpoint()
-        val touched = reduced.select(col("user_id"))
-        mvStore.swap(applyBatch(mvStore.read(), pre, post, touched).localCheckpoint())
-        keyStore.swap(post)
-      }
-      .start()
+    StreamingSnapshotMerge.attachMv(changes, keyStore, mvStore)(applyBatch)
 }

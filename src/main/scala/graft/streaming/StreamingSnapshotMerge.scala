@@ -87,15 +87,8 @@ object StreamingSnapshotMerge {
   def liveView(snapshot: DataFrame): DataFrame =
     snapshot.filter(!col("deleted")).drop("deleted")
 
-  /** Driver-held snapshot for specs/smoke runs. The merger hands swap
-    * a frame derived from a per-batch localCheckpoint, so the stored
-    * plan never grows with the number of merged batches. */
-  final class InMemorySnapshotStore(spark: SparkSession) {
-    @volatile private var current: DataFrame = emptySnapshot(spark)
-    def read(): DataFrame = current
-    /** `next` must already be lineage-truncated (see [[attach]]). */
-    def swap(next: DataFrame): Unit = { current = next }
-  }
+  /** Driver-held snapshot for specs/smoke runs. */
+  final class InMemorySnapshotStore(spark: SparkSession) extends FrameStore(emptySnapshot(spark))
 
   /** Attach the merger to a streaming CDC-log DataFrame (conforming
     * columns: user_id, event_id, time_us, cdc_operation, value,
@@ -114,6 +107,27 @@ object StreamingSnapshotMerge {
         val now = merged.agg(max(col("last_write_us"))).head()
         if (!now.isNullAt(0)) store.swap(trim(merged, now.getLong(0), confidenceUs))
         else store.swap(merged)
+      }
+      .start()
+
+  /** The micro-batch body of the single-relation MV twins
+    * ([[StreamingMvMaintain]], [[StreamingMvMinMax]],
+    * [[StreamingMvTopk]]), which differ only in `applyBatch`: reduce
+    * → merge key state → `applyBatch(mv, preState, postState,
+    * touchedKeys)` → swap both stores. `applyBatch` reads the MERGED
+    * state, so a replayed or stale batch whose merge is a no-op leaves
+    * the MV as it was: every twin inherits the snapshot's idempotency. */
+  def attachMv(changes: DataFrame, keyStore: InMemorySnapshotStore, mvStore: FrameStore)(
+      applyBatch: (DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    changes.writeStream
+      .outputMode("append")
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        val reduced = reduceSlice(df).localCheckpoint()
+        val pre = keyStore.read()
+        val post = mergeReduced(pre, reduced).localCheckpoint()
+        val touched = reduced.select(col("user_id"))
+        mvStore.swap(applyBatch(mvStore.read(), pre, post, touched).localCheckpoint())
+        keyStore.swap(post)
       }
       .start()
 }

@@ -56,18 +56,15 @@ object StreamingTsAnomaly {
   /** Driver-held day-grain state + the exactly-once batch-id
     * high-water mark (production swaps into a transactional
     * day-partitioned table and stores the batch id in the same
-    * transaction — the classic foreachBatch idempotent-sink rule). */
-  final class InMemoryDailyStore(spark: SparkSession) {
-    @volatile private var current: DataFrame = emptyDaily(spark)
+    * transaction — the classic foreachBatch idempotent-sink rule).
+    * Its view is the monitor's: the batch detector's scoring over the
+    * maintained day-grain frame. */
+  final class InMemoryDailyStore(spark: SparkSession)
+      extends FrameStore(emptyDaily(spark), graft.analytics.TimeSeries.anomalyOfDaily) {
     @volatile private var lastBatchId: Long = -1L
-    def read(): DataFrame = current
     def appliedThrough: Long = lastBatchId
-    /** The monitor's live view: the batch detector's scoring over the
-      * maintained day-grain frame. */
-    def anomalies(): DataFrame = graft.analytics.TimeSeries.anomalyOfDaily(current)
-    def swap(next: DataFrame, batchId: Long): Unit = {
-      current = next; lastBatchId = batchId
-    }
+    def anomalies(): DataFrame = readView()
+    def swap(next: DataFrame, batchId: Long): Unit = { swap(next); lastBatchId = batchId }
   }
 
   /** Attach the monitor to a streaming events-shaped DataFrame

@@ -207,6 +207,30 @@ class CdcStateStoreSpec extends SparkSpec {
     assert(store.all().size == 6)
   }
 
+  test("record and recordRows only ever advance a stream's mark") {
+    import spark.implicits._
+    val recorders = Seq[(String, (Seq[Delivered], CdcStateStore) => Unit)](
+      "record" -> ((rows, s) => CdcCheckpoints.record(rows.toDS(), s)),
+      "recordRows" -> ((rows, s) => CdcCheckpoints.recordRows(rows, s)))
+    recorders.foreach { case (name, recordTo) =>
+      val store = new InMemoryStateStore
+      val mark = StreamProgress(ms(20), 2L, 5L)
+      store.put(1L, mark)
+      // a fresh checkpoint resumed against this store redelivers
+      // changes it already passed: a batch of only stale rows for
+      // stream 1 must leave its mark, while stream 2 still records
+      recordTo(Seq(Delivered(1, ms(10), 1, 2, 0.0, 1), Delivered(2, ms(5), 1, 2, 0.0, 1)), store)
+      assert(store.get(1L).contains(mark), name)
+      assert(store.get(2L).contains(StreamProgress(ms(5), 1L, 1L)), name)
+      // the same change id again is no advance either
+      recordTo(Seq(Delivered(1, ms(20), 2, 2, 0.0, 2)), store)
+      assert(store.get(1L).contains(mark), name)
+      // a later change id moves it, event id breaking the time tie
+      recordTo(Seq(Delivered(1, ms(20), 3, 2, 0.0, 3)), store)
+      assert(store.get(1L).contains(StreamProgress(ms(20), 3L, 3L)), name)
+    }
+  }
+
   test("two sources run under one lifecycle with independent checkpoints") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -9,12 +9,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * Structured-Streaming re-expression of Worker/TaskAction. */
 class CdcStreamConsumerSpec extends SparkSpec {
 
-  private def run(batches: Seq[Seq[Change]]): Seq[Delivered] = {
+  private def run(batches: Seq[Seq[Change]],
+      from: Option[CdcStateStore] = None): Seq[Delivered] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Change]
     val name = s"out_${System.nanoTime()}"
-    val query = consume(spark, input.toDS())
+    val delivered = from.fold(consume(spark, input.toDS()))(consumeFrom(spark, input.toDS(), _))
+    val query = delivered
       .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       batches.foreach { b => input.addData(b); query.processAllAvailable() }
@@ -41,6 +43,18 @@ class CdcStreamConsumerSpec extends SparkSpec {
     val s = out.filter(_.streamId == 7).sortBy(_.seqNo)
     assert(s.map(c => (c.timeUs, c.eventId)) == Seq((10L, 1L), (20L, 2L), (20L, 3L), (30L, 4L)))
     assert(s.map(_.seqNo) == Seq(1L, 2L, 3L, 4L)) // seq continues across batches
+  }
+
+  test("a change that appears twice in one micro-batch is delivered once") {
+    // an at-least-once source can put the same change id twice into
+    // one trigger; both consume and consumeFrom deliver it once
+    val batch = Seq(Change(3, 10, 1, 2, 0.0), Change(3, 10, 1, 2, 0.0), Change(3, 20, 2, 1, 0.0))
+    val fresh = run(Seq(batch))
+    assert(fresh.map(d => (d.timeUs, d.eventId, d.seqNo)).sorted == Seq((10L, 1L, 1L), (20L, 2L, 2L)))
+    val store = new InMemoryStateStore
+    store.put(3L, StreamProgress(5L, 0L, 4L))
+    val resumed = run(Seq(batch), Some(store))
+    assert(resumed.map(d => (d.timeUs, d.eventId, d.seqNo)).sorted == Seq((10L, 1L, 5L), (20L, 2L, 6L)))
   }
 
   test("state isolates streams") {

@@ -44,7 +44,8 @@ OLD number on the session-drift-corrected scale:
 
 Validated on the round-9 -> round-10 data: flags corpus_bpe_merges
 (1.25 -> 2.01 s, all passes elevated) and nothing else. The round-11
-artifacts' 10 flags adjudicated by --confirm are in BENCH_DIFF_r11.json.
+artifacts' 10 flags were adjudicated by --confirm (that report,
+BENCH_DIFF_r11.json, is in the git history).
 """
 import json
 import os
