@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
 object CdcOps {
 
   import CdcSchema._
+  import ChangeOrder.{latestPerKey, livePerKey, newestFirst, oldestFirst}
 
   /** Epoch of the synthetic log (2024-01-01T00:00:00Z) in µs — the
     * "generation start" analogue for window arithmetic. */
@@ -71,7 +72,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
   def streamOrderingFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("cdc_stream_id")).orderBy(col("time_us"), col("event_id"))
+    val w = Window.partitionBy(col("cdc_stream_id")).orderBy(oldestFirst: _*)
     log
       .select(col("cdc_stream_id"), col("time_us"), col("event_id"), col("cdc_operation"))
       .withColumn("change_seq", row_number().over(w))
@@ -201,17 +202,12 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
-  def replicateLwwFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    log
-      .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+  def replicateLwwFromLog(log: DataFrame): DataFrame =
+    livePerKey(log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         col("value"), col("props"))
       .orderBy(col("user_id"))
-  }
 
   val replicateLwwSql: String = CdcLogAdapter.oracleCte +
     """SELECT user_id, event_id AS last_event_id, time_us AS last_write_us,
@@ -266,19 +262,21 @@ object CdcOps {
   private[graft] def floorDivSql(a: String, b: Long): String =
     s"(($a) div $b - (CASE WHEN ($a) % $b < 0 THEN 1 ELSE 0 END))"
 
+  /** `value` in exact integer cents — the checksum's and the MV
+    * family's arithmetic. */
+  private val Cents: Column = (col("value").cast("decimal(18,2)") * 100).cast("long")
+
   /** Checksum any conforming materialized state: needs `user_id`,
     * `value`, `last_event_id`. */
-  def checksumFrame(state: DataFrame): DataFrame = {
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
+  def checksumFrame(state: DataFrame): DataFrame =
     state
-      .select(col("user_id"), col("last_event_id"), cents.as("cents"))
+      .select(col("user_id"), col("last_event_id"), Cents.as("cents"))
       .withColumn("range_id", expr(floorDivSql("user_id", ChecksumRangeUsers)))
       .withColumn("row_digest",
         expr(s"(user_id * 1000003 + cents * 31 + last_event_id * 7) % $ChecksumMod"))
       .groupBy(col("range_id"))
       .agg(count(lit(1)).as("n_rows"), sum(col("row_digest")).as("digest"))
       .orderBy(col("range_id"))
-  }
 
   val replicaChecksumSql: String = CdcLogAdapter.oracleCte +
     s""", state AS (
@@ -322,17 +320,14 @@ object CdcOps {
   def timeTravelFromLog(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
     val cuts = TimeTravelCutoffs.toDF("as_of", "cutoff_us")
-    val w = Window.partitionBy(col("as_of"), col("user_id"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
-    log
+    val beforeCut = log
       .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
       // no broadcast HINT (the repo rule: no forced hints in cdc
       // operators — PlanGuardSpec); a 3-row LocalRelation broadcasts
       // on stats anyway
       .crossJoin(cuts)
       .filter(col("time_us") < col("cutoff_us"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    livePerKey(beforeCut, "as_of", "user_id")
       .select(col("as_of"), col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("value"), col("props"))
       .orderBy(col("as_of"), col("user_id"))
@@ -366,11 +361,8 @@ object CdcOps {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
     val pd = ckLog.filter(col("cdc_operation") === PartitionDelete)
       .groupBy(col("user_id")).agg(max(col("time_us")).as("pd_time_us"))
-    val w = Window.partitionBy(col("user_id"), col("ck"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
-    ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    livePerKey(ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)),
+        "user_id", "ck")
       // pd grows with the log (one row per delete-carrying partition) —
       // no forced hint: AQE broadcasts it while small and falls back to
       // a key shuffle once a delete-heavy log outgrows the driver.
@@ -410,8 +402,7 @@ object CdcOps {
     * IllegalStateException) yields no pair, and an overwritten left
     * (two consecutive lefts) pairs with the newer one. */
   def rangeDeleteFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("cdc_stream_id"))
-      .orderBy(col("time_us"), col("event_id"))
+    val w = Window.partitionBy(col("cdc_stream_id")).orderBy(oldestFirst: _*)
     val bounds = log
       .filter(col("cdc_operation").isin(RangeDeleteInclLeft, RangeDeleteExclLeft,
         RangeDeleteInclRight, RangeDeleteExclRight))
@@ -464,8 +455,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
   def preimageCheckFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("time_us"), col("event_id"))
+    val w = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val isWrite = col("cdc_operation").isin(RowUpdate, RowInsert)
     log
@@ -541,7 +531,7 @@ object CdcOps {
     * triple (`attrs`, `cdc_deleted_elements_attrs`,
     * `cdc_deleted_attrs`). */
   def collectionApplyFromLog(log: DataFrame): DataFrame = {
-    val seqW = Window.partitionBy(col("user_id")).orderBy(col("time_us"), col("event_id"))
+    val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
     val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val staged = log
       .select(col("user_id"), col("time_us"), col("event_id"),
@@ -624,7 +614,7 @@ object CdcOps {
     * (`items` map<bigint,double> with timeuuid-like keys,
     * `cdc_deleted_elements_items`, `cdc_deleted_items`). */
   def collectionApplyListFromLog(log: DataFrame): DataFrame = {
-    val seqW = Window.partitionBy(col("user_id")).orderBy(col("time_us"), col("event_id"))
+    val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
     val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val staged = log
       .select(col("user_id"), col("time_us"), col("event_id"),
@@ -710,7 +700,7 @@ object CdcOps {
     * (`udt` struct<f0,f1,f2>, `cdc_deleted_elements_udt` array<int>
     * of field indices, `cdc_deleted_udt`). */
   def collectionApplyUdtFromLog(log: DataFrame): DataFrame = {
-    val seqW = Window.partitionBy(col("user_id")).orderBy(col("time_us"), col("event_id"))
+    val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
     val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val staged = log
       .select(col("user_id"), col("time_us"), col("event_id"),
@@ -787,16 +777,11 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
-  def postimageApplyFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    log
-      .filter(col("cdc_operation") === PostImage)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def postimageApplyFromLog(log: DataFrame): DataFrame =
+    latestPerKey(log.filter(col("cdc_operation") === PostImage), "user_id")
       .select(col("user_id"), col("event_id"), col("time_us").as("applied_at_us"),
         col("value"), col("props"))
       .orderBy(col("user_id"))
-  }
 
   val postimageApplySql: String = CdcLogAdapter.oracleCte +
     """SELECT user_id, event_id, time_us AS applied_at_us, value, props
@@ -815,7 +800,7 @@ object CdcOps {
       .withColumn("vnode_id", (col("cdc_stream_id") % NumVnodes).cast("int"))
       .groupBy(col("generation_id"), col("vnode_id"))
       .agg(count(lit(1)).as("n_consumed"),
-        max(struct(col("time_us"), col("event_id"))).as("last"))
+        ChangeOrder.newest(col("time_us"), col("event_id")).as("last"))
       .select(col("generation_id"), col("vnode_id"), col("n_consumed"),
         col("last.time_us").as("last_time_us"),
         col("last.event_id").as("last_event_id"),
@@ -967,12 +952,9 @@ object CdcOps {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
     // last write per (user_id, ck): upserts 1/2 and postimage 9 set the
     // row, delete 3 tombstones it — newest wins
-    val w = Window.partitionBy(col("user_id"), col("ck"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
-    val lastWrites = ckLog
-      .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete, PostImage))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    val lastWrites = livePerKey(
+      ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete, PostImage)),
+      "user_id", "ck")
     // newest partition delete per partition
     val pd = ckLog.filter(col("cdc_operation") === PartitionDelete)
       .groupBy(col("user_id")).agg(max(col("time_us")).as("pd_time_us"))
@@ -1048,11 +1030,8 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation. */
   def replicateTtlFromLog(log: DataFrame): DataFrame = {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
-    val w = Window.partitionBy(col("user_id"), col("ck"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
-    ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    livePerKey(ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)),
+        "user_id", "ck")
       .withColumn("is_expired",
         col("cdc_ttl").isNotNull && col("time_us") + col("cdc_ttl") * 1000000L <= NowUs)
       .select(col("user_id"), col("ck"), col("time_us").as("last_write_us"),
@@ -1152,20 +1131,15 @@ object CdcOps {
     compactionFromLog(cdcLog(spark, dir))
 
   /** Same operator over ANY conforming CDC-log relation. */
-  def compactionFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val wAll = Window.partitionBy(col("user_id"))
-    log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n_changes", count(lit(1)).over(wAll))
-      .filter(col("rn") === 1)
+  def compactionFromLog(log: DataFrame): DataFrame =
+    ChangeOrder.latestPerKeyCounted(
+        log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         (col("cdc_operation") === RowDelete).as("is_tombstone"),
         col("value"), col("props"),
         (col("n_changes") - 1).as("n_superseded"))
       .orderBy(col("user_id"))
-  }
 
   val compactionSql: String = CdcLogAdapter.oracleCte +
     """SELECT user_id, event_id AS last_event_id, time_us AS last_write_us,
@@ -1300,7 +1274,7 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation. */
   def scd2HistoryFromLog(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us"), col("event_id"))
+    val w = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
     log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
       .withColumn("valid_to_us", lead(col("time_us"), 1).over(w))
       .filter(col("cdc_operation") =!= RowDelete)
@@ -1330,6 +1304,21 @@ object CdcOps {
     * both the snapshot and the incremental batch are non-trivial. */
   val SnapshotCutoffUs: Long = GenerationStartUs + 15L * 86400 * 1000000
 
+  /** The incremental operators' stored T0 state: live rows as of
+    * `cutoffUs` (changes at or before it). */
+  private def t0State(writes: DataFrame, cutoffUs: Long, key: String): DataFrame =
+    livePerKey(writes.filter(col("time_us") <= cutoffUs), key)
+
+  /** The incremental operators' slice verdict: each touched key's
+    * newest change after `cutoffUs`, a tombstone when it is a delete. */
+  private def sliceVerdict(writes: DataFrame, cutoffUs: Long, key: String): DataFrame =
+    latestPerKey(writes.filter(col("time_us") > cutoffUs), key)
+
+  /** The bucket MVs' T0 state: (user_id, cents, bucket). */
+  private def bucketedT0(writes: DataFrame, cutoffUs: Long): DataFrame =
+    t0State(writes, cutoffUs, "user_id").select(col("user_id"), Cents.as("cents"))
+      .withColumn("bucket", expr(floorDivSql("cents", MvBucketCents)))
+
   /** #14d: incremental snapshot merge — the CDC→lakehouse pattern: a
     * base-table SNAPSHOT materialized up to T0 has a later log slice
     * (T0, now] MERGEd onto it, yielding the state a full replay would
@@ -1356,17 +1345,12 @@ object CdcOps {
     * arbitrary snapshot cutoff — bring your own log. */
   def snapshotMergeFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
     val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
     // the stored snapshot: last-writer-wins state at T0 (deleted keys absent)
-    val snapshot = writes.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    val snapshot = t0State(writes, cutoffUs, "user_id")
       .select(col("user_id"), col("event_id").as("s_event_id"), col("time_us").as("s_time_us"),
         col("cdc_operation").as("s_op"), col("value").as("s_value"), col("props").as("s_props"))
     // the incremental batch: one surviving change per touched key
-    val batch = writes.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val batch = sliceVerdict(writes, cutoffUs, "user_id")
       .select(col("user_id"), col("event_id").as("b_event_id"), col("time_us").as("b_time_us"),
         col("cdc_operation").as("b_op"), col("value").as("b_value"), col("props").as("b_props"))
     val batchWins = col("b_event_id").isNotNull
@@ -1466,19 +1450,12 @@ object CdcOps {
     * arbitrary slice start — bring your own log. */
   def mvMaintainFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
     val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
     // stored T0 state (the replicator's output at T0): LWW per key,
     // deleted keys absent — value carried as exact integer cents
-    val s0 = writes.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("user_id"), cents.as("cents"))
+    val s0 = t0State(writes, cutoffUs, "user_id").select(col("user_id"), Cents.as("cents"))
     // the slice verdict per touched key: its final op + final cents
-    val batch = writes.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("cdc_operation").as("b_op"), cents.as("b_cents"))
+    val batch = sliceVerdict(writes, cutoffUs, "user_id")
+      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
     // retract T0 contributions of touched keys; insert end-of-slice
     // contributions (none when the slice ends in a tombstone)
     val oldC = s0.join(batch.select(col("user_id")), Seq("user_id"), "left_semi")
@@ -1537,20 +1514,12 @@ object CdcOps {
     * own log. */
   def mvMinMaxFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
     val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-    val s0 = writes.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("user_id"), cents.as("cents"))
-      .withColumn("bucket", expr(floorDivSql("cents", MvBucketCents)))
+    val s0 = bucketedT0(writes, cutoffUs)
     val base = s0.groupBy(col("bucket"))
       .agg(count(lit(1)).as("base_n"), min(col("cents")).as("base_mn"),
         max(col("cents")).as("base_mx"))
-    val batch = writes.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("cdc_operation").as("b_op"), cents.as("b_cents"))
+    val batch = sliceVerdict(writes, cutoffUs, "user_id")
+      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
     val newRows = batch.filter(col("b_op") =!= RowDelete)
       .select(col("user_id"), col("b_cents").as("cents"),
         expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"))
@@ -1642,14 +1611,8 @@ object CdcOps {
     * partition-pruned — the claim [[mvMinMaxFromLog]]'s scaladoc
     * makes, as a code path. */
   def writeMvSnapshot(log: DataFrame, cutoffUs: Long, dir: String): Unit = {
-    val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-    val s0 = writes.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("user_id"), cents.as("cents"))
-      .withColumn("bucket", expr(floorDivSql("cents", MvBucketCents)))
+    val s0 = bucketedT0(
+      log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), cutoffUs)
     s0.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/snapshot")
     s0.groupBy(col("bucket"))
       .agg(count(lit(1)).as("base_n"), min(col("cents")).as("base_mn"),
@@ -1676,14 +1639,11 @@ object CdcOps {
     * one the partition filter prunes); (c) the base MV is read from
     * its stored bucket-grain edition — never recomputed. */
   def mvMinMaxFromStored(spark: SparkSession, dir: String, slice: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
     val snapshot = spark.read.parquet(s"$dir/snapshot")
     val base = spark.read.parquet(s"$dir/mv")
-    val batch = slice.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("cdc_operation").as("b_op"), cents.as("b_cents"))
+    val batch = latestPerKey(
+        slice.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
+      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
       .localCheckpoint() // feeds the bucket probe, the key anti-join and the new rows
     val newRows = batch.filter(col("b_op") =!= RowDelete)
       .select(col("user_id"), col("b_cents").as("cents"),
@@ -1808,16 +1768,15 @@ object CdcOps {
   def mvJoinMaintain(spark: SparkSession, dir: String): DataFrame = {
     val writes = cdcLog(spark, dir)
       .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
     // the shared feed split into a fact log (user grain) and a sparse
     // dimension log (segment grain, ~1/17 of writes): deterministic,
     // reproduced literally by the oracle
     val rLog = writes.filter(col("event_id") % 17 =!= 0)
       .select(col("user_id"), (col("user_id") % 100).as("segment_id"),
-        col("event_id"), col("time_us"), col("cdc_operation"), cents.as("cents"))
+        col("event_id"), col("time_us"), col("cdc_operation"), Cents.as("cents"))
     val sLog = writes.filter(col("event_id") % 17 === 0)
       .select((col("user_id") % 100).as("segment_id"),
-        col("event_id"), col("time_us"), col("cdc_operation"), cents.as("tier_cents"))
+        col("event_id"), col("time_us"), col("cdc_operation"), Cents.as("tier_cents"))
     mvJoinMaintainFromLogs(rLog, sLog, SnapshotCutoffUs)
   }
 
@@ -1826,25 +1785,14 @@ object CdcOps {
     * cents); `sLog`: (segment_id, event_id, time_us, cdc_operation,
     * tier_cents). LWW per key by (time_us, event_id) within each. */
   def mvJoinMaintainFromLogs(rLog: DataFrame, sLog: DataFrame, cutoffUs: Long): DataFrame = {
-    val wR = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val wS = Window.partitionBy(col("segment_id")).orderBy(col("time_us").desc, col("event_id").desc)
     // T0 fact state + the fact slice's per-key verdict
-    val r0 = rLog.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(wR))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    val r0 = t0State(rLog, cutoffUs, "user_id")
       .select(col("user_id"), col("segment_id"), col("cents"))
-    val dR = rLog.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(wR))
-      .filter(col("rn") === 1)
+    val dR = sliceVerdict(rLog, cutoffUs, "user_id")
       .select(col("user_id"), col("segment_id"), col("cdc_operation").as("r_op"), col("cents"))
     // T0 dimension state + the dimension slice's per-key verdict
-    val s0 = sLog.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("segment_id"), col("tier_cents"))
-    val dS = sLog.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1)
+    val s0 = t0State(sLog, cutoffUs, "segment_id").select(col("segment_id"), col("tier_cents"))
+    val dS = sliceVerdict(sLog, cutoffUs, "segment_id")
       .select(col("segment_id"), col("cdc_operation").as("s_op"), col("tier_cents"))
     // the updated dimension: untouched segments carry their T0 row
     val s1 = s0.join(dS.select(col("segment_id")), Seq("segment_id"), "left_anti")
@@ -1958,16 +1906,9 @@ object CdcOps {
     * scaladoc makes, as a code path. */
   def writeMvJoinSnapshot(rLog: DataFrame, sLog: DataFrame, cutoffUs: Long,
       dir: String): Unit = {
-    val wR = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val wS = Window.partitionBy(col("segment_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val r0 = rLog.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(wR))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
+    val r0 = t0State(rLog, cutoffUs, "user_id")
       .select(col("user_id"), col("cents"), col("segment_id"))
-    val s0 = sLog.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("segment_id"), col("tier_cents"))
+    val s0 = t0State(sLog, cutoffUs, "segment_id").select(col("segment_id"), col("tier_cents"))
     r0.write.mode("overwrite").partitionBy("segment_id").parquet(s"$dir/fact")
     s0.write.mode("overwrite").parquet(s"$dir/dim")
     r0.join(s0, Seq("segment_id"))
@@ -1990,18 +1931,14 @@ object CdcOps {
     * action-for-action equality with [[mvJoinMaintainFromLogs]]. */
   def mvJoinFromStored(spark: SparkSession, dir: String,
       rSlice: DataFrame, sSlice: DataFrame): DataFrame = {
-    val wR = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val wS = Window.partitionBy(col("segment_id")).orderBy(col("time_us").desc, col("event_id").desc)
     val fact = spark.read.parquet(s"$dir/fact")
     val dim = spark.read.parquet(s"$dir/dim")
     val base = spark.read.parquet(s"$dir/mv")
-    val dR = rSlice.withColumn("rn", row_number().over(wR))
-      .filter(col("rn") === 1)
+    val dR = latestPerKey(rSlice, "user_id")
       .select(col("user_id"), col("segment_id"), col("cdc_operation").as("r_op"),
         col("cents"))
       .localCheckpoint() // feeds the key lookup, the cohort anti-join and the inserts
-    val dS = sSlice.withColumn("rn", row_number().over(wS))
-      .filter(col("rn") === 1)
+    val dS = latestPerKey(sSlice, "segment_id")
       .select(col("segment_id"), col("cdc_operation").as("s_op"), col("tier_cents"))
       .localCheckpoint() // feeds the segment literal and the dimension update
     // touched segments → driver literal (dimension-grain metadata;
@@ -2083,23 +2020,15 @@ object CdcOps {
     * own log. */
   def mvTopkFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
     val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("time_us").desc, col("event_id").desc)
-    val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
     val wTk = Window.partitionBy(col("bucket"))
       .orderBy(col("cents").desc, col("user_id").desc)
-    val s0 = writes.filter(col("time_us") <= cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("cdc_operation") =!= RowDelete)
-      .select(col("user_id"), cents.as("cents"))
-      .withColumn("bucket", expr(floorDivSql("cents", MvBucketCents)))
+    val s0 = bucketedT0(writes, cutoffUs)
     // the stored MV edition: T0 top-k rank rows per bucket
     val baseTk = s0.withColumn("rk", row_number().over(wTk))
       .filter(col("rk") <= MvTopK)
       .select(col("bucket"), col("rk"), col("cents"))
-    val batch = writes.filter(col("time_us") > cutoffUs)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("cdc_operation").as("b_op"), cents.as("b_cents"))
+    val batch = sliceVerdict(writes, cutoffUs, "user_id")
+      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
     val newRows = batch.filter(col("b_op") =!= RowDelete)
       .select(col("user_id"), col("b_cents").as("cents"),
         expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"))
@@ -2221,15 +2150,14 @@ object CdcOps {
       RangeDeleteInclRight, RangeDeleteExclRight)
     val isLeft = col("cdc_operation").isin(RangeDeleteInclLeft, RangeDeleteExclLeft)
     val isRight = col("cdc_operation").isin(RangeDeleteInclRight, RangeDeleteExclRight)
-    val w = Window.partitionBy(col("cdc_stream_id")).orderBy(col("time_us"), col("event_id"))
+    val w = Window.partitionBy(col("cdc_stream_id")).orderBy(oldestFirst: _*)
     // The "nearest FOLLOWING range op" is evaluated as a running last()
     // over the REVERSED sort, not first() over (1, unboundedFollowing):
     // Spark executes UnboundedFollowing frames by re-scanning the frame
     // for every row (O(rows²) per stream partition — 3.9 s vs 0.4 s for
     // the same data at sf0.1), while UnboundedPreceding frames are a
     // single running accumulation. Same one exchange; one extra sort.
-    val wRev = Window.partitionBy(col("cdc_stream_id"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
+    val wRev = Window.partitionBy(col("cdc_stream_id")).orderBy(newestFirst: _*)
     val rangeOp = when(isRange, col("cdc_operation"))
     val reason = when(col("cdc_ttl").isNotNull &&
         col("cdc_operation").isin(RowDelete, PartitionDelete,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import CdcStreamConsumer.{HasChangeId, freshInOrder}
+import graft.cdc.ChangeOrder.{HasChangeId, freshInOrder}
 
 /** Streaming replication of a non-frozen collection column — the
   * stateful twin of the batch epoch fold in

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import CdcStreamConsumer.{Delivered, isAfter}
+import graft.cdc.ChangeOrder.isAfter
+import CdcStreamConsumer.Delivered
 
 /** Kafka-ready projection of delivered changes — the essence of the
   * reference's scylla-cdc-kafka-connect module (a source connector

@@ -4,7 +4,8 @@ import java.nio.ByteBuffer
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
-import CdcStreamConsumer.{StreamProgress, isAfter}
+import graft.cdc.ChangeOrder
+import CdcStreamConsumer.StreamProgress
 
 /** External checkpoint store for per-stream consumer progress — the
   * analogue of the reference's pluggable `CDCStateStore`
@@ -25,6 +26,10 @@ import CdcStreamConsumer.{StreamProgress, isAfter}
 trait CdcStateStore {
   def get(streamId: Long): Option[StreamProgress]
   def put(streamId: Long, p: StreamProgress): Unit
+  /** One micro-batch's marks as one write; [[CdcCheckpoints]] calls it
+    * once per batch. The default puts them one by one. */
+  def putAll(marks: Map[Long, StreamProgress]): Unit =
+    marks.foreach { case (id, p) => put(id, p) }
   def all(): Map[Long, StreamProgress]
   def clear(): Unit
 }
@@ -71,7 +76,7 @@ object TaskStateSerde {
   *
   * Scale: the file is O(streams) — per-stream progress is cluster
   * metadata (64k streams × 32 B = 2 MB), never data; one rewrite per
-  * micro-batch is noise next to the batch itself. */
+  * micro-batch ([[putAll]]) is noise next to the batch itself. */
 final class FileStateStore(path: java.nio.file.Path) extends CdcStateStore {
   import java.nio.file.{Files, StandardCopyOption}
 
@@ -99,6 +104,11 @@ final class FileStateStore(path: java.nio.file.Path) extends CdcStateStore {
   override def put(streamId: Long, p: StreamProgress): Unit = {
     m.put(streamId, p); flush()
   }
+  /** One rewrite for the whole batch of marks. */
+  override def putAll(marks: Map[Long, StreamProgress]): Unit = synchronized {
+    marks.foreach { case (id, p) => m.put(id, p) }
+    flush()
+  }
   override def all(): Map[Long, StreamProgress] = m.asScala.toMap
   override def clear(): Unit = { m.clear(); flush() }
 }
@@ -109,36 +119,37 @@ object CdcCheckpoints {
 
   import org.apache.spark.sql.Dataset
 
-  /** Put `p` only if it is after the stream's stored mark, which so
-    * never moves backwards — a fresh checkpoint resumed against a
-    * populated store redelivers changes the store already passed. */
-  private def advance(store: CdcStateStore, streamId: Long, p: StreamProgress): Unit =
-    if (store.get(streamId).forall(m =>
-        isAfter(p.lastTimeUs, p.lastEventId, m.lastTimeUs, m.lastEventId)))
-      store.put(streamId, p)
+  /** Write the batch's marks that are after the stored ones, as one
+    * [[CdcStateStore.putAll]] — none when no mark moved. A stream's
+    * mark so never moves backwards: a fresh checkpoint resumed against
+    * a populated store redelivers changes the store already passed. */
+  private def advance(store: CdcStateStore, latest: Iterable[(Long, StreamProgress)]): Unit = {
+    val moved = latest.filter { case (id, p) => store.get(id).forall(m =>
+      ChangeOrder.isAfter(p.lastTimeUs, p.lastEventId, m.lastTimeUs, m.lastEventId)) }
+    if (moved.nonEmpty) store.putAll(moved.toMap)
+  }
 
-  /** Record a micro-batch's high-water marks into the store — at most
-    * one store write per stream per batch ([[advance]] to the newest
+  /** Record a micro-batch's high-water marks into the store — one
+    * store write per batch ([[advance]] each stream to its newest
     * delivered change).
     * The reduction happens in Spark (tiny groupBy on the batch);
     * only the per-stream maxima reach the driver-side store, so the
     * call is O(streams-in-batch), not O(changes). */
   def record(batch: Dataset[CdcStreamConsumer.Delivered], store: CdcStateStore): Unit = {
-    import org.apache.spark.sql.functions._
-    batch.groupBy(col("streamId"))
-      .agg(max(struct(col("timeUs"), col("eventId"), col("seqNo"))).as("last"))
+    import org.apache.spark.sql.functions.col
+    val latest = batch.groupBy(col("streamId"))
+      .agg(ChangeOrder.newest(col("timeUs"), col("eventId"), col("seqNo")).as("last"))
       .select(col("streamId"), col("last.timeUs"), col("last.eventId"), col("last.seqNo"))
       .collect()
-      .foreach { r =>
-        advance(store, r.getLong(0), StreamProgress(r.getLong(1), r.getLong(2), r.getLong(3)))
-      }
+      .map(r => r.getLong(0) -> StreamProgress(r.getLong(1), r.getLong(2), r.getLong(3)))
+    advance(store, latest)
   }
 
   /** [[record]] for a batch already collected to the driver: the same
     * per-stream maxima, taken from the rows instead of another job. */
   def recordRows(rows: Iterable[CdcStreamConsumer.Delivered], store: CdcStateStore): Unit =
-    rows.groupBy(_.streamId).foreach { case (sid, ds) =>
-      val last = ds.maxBy(d => (d.timeUs, d.eventId, d.seqNo))
-      advance(store, sid, StreamProgress(last.timeUs, last.eventId, last.seqNo))
-    }
+    advance(store, rows.groupBy(_.streamId).map { case (sid, ds) =>
+      val last = ds.maxBy(d => (ChangeOrder.id(d), d.seqNo))
+      sid -> StreamProgress(last.timeUs, last.eventId, last.seqNo)
+    })
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.cdc.ChangeOrder.{HasChangeId, freshInOrder, id, isAfter}
+
 /** Structured-Streaming CDC consumer: per-stream ordered delivery with
   * checkpointable progress — exactly-once WITHIN the streaming Dataset
   * (state-store dedupe + checkpoint replay produce each change once in
@@ -28,9 +30,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object CdcStreamConsumer {
 
-  /** Anything addressed by a CDC ChangeId (timeUs, eventId). */
-  trait HasChangeId { def timeUs: Long; def eventId: Long }
-
   /** One CDC change addressed by (streamId, ChangeId=(timeUs, eventId)). */
   case class Change(streamId: Long, timeUs: Long, eventId: Long,
       operation: Int, value: Double) extends HasChangeId
@@ -40,24 +39,7 @@ object CdcStreamConsumer {
 
   /** A delivered change, stamped with its per-stream sequence number. */
   case class Delivered(streamId: Long, timeUs: Long, eventId: Long,
-      operation: Int, value: Double, seqNo: Long)
-
-  /** ChangeId order, the one rule behind every "newer than the mark"
-    * test in graft.streaming: change id (timeUs, eventId) comes
-    * strictly after (lastTimeUs, lastEventId) — time first, the event
-    * id breaking ties. */
-  private[streaming] def isAfter(timeUs: Long, eventId: Long,
-      lastTimeUs: Long, lastEventId: Long): Boolean =
-    timeUs > lastTimeUs || (timeUs == lastTimeUs && eventId > lastEventId)
-
-  /** One group's changes after the mark (lastTimeUs, lastEventId), each
-    * change id once, in ChangeId order. */
-  private[streaming] def freshInOrder[C <: HasChangeId](changes: Iterator[C],
-      lastTimeUs: Long, lastEventId: Long): Seq[C] =
-    changes.toSeq
-      .filter(c => isAfter(c.timeUs, c.eventId, lastTimeUs, lastEventId))
-      .distinctBy(c => (c.timeUs, c.eventId))
-      .sortBy(c => (c.timeUs, c.eventId))
+      operation: Int, value: Double, seqNo: Long) extends HasChangeId
 
   /** Deliver one micro-batch's changes for a stream: sort to ChangeId
     * order, drop anything at or before the checkpoint (replays) and
@@ -102,7 +84,6 @@ object CdcStreamConsumer {
       store: CdcStateStore): Dataset[Delivered] = {
     import spark.implicits._
     val initial = store.all().toSeq
-      .map { case (sid, p) => (sid, p) }
       .toDS()
       .groupByKey(_._1)
       .mapValues(_._2)
@@ -137,10 +118,10 @@ object CdcStreamConsumer {
     // is still waiting out the confidence window
     val fresh = (p.pending ++ changes)
       .filter(c => isAfter(c.timeUs, c.eventId, p.lastTimeUs, p.lastEventId))
-      .distinctBy(c => (c.timeUs, c.eventId))
+      .distinctBy(id)
     // watermark 0 = not yet established → everything stays buffered
     val (ready, hold) = fresh.partition(c => watermarkUs > 0 && c.timeUs <= watermarkUs)
-    val ordered = ready.sortBy(c => (c.timeUs, c.eventId))
+    val ordered = ready.sortBy(id)
     val newProgress = ordered.lastOption match {
       case Some(lastC) => BufferedProgress(lastC.timeUs, lastC.eventId,
         p.delivered + ordered.size, hold)

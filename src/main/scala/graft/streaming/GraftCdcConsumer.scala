@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import CdcStreamConsumer.{Change, Delivered, isAfter}
+import graft.cdc.ChangeOrder.isAfter
+import CdcStreamConsumer.{Change, Delivered}
 
 /** User-facing consumer builder — the Spark-first analogue of the
   * reference's `CDCConsumer.builder()`
@@ -354,37 +355,31 @@ final class GraftCdcConsumer private[streaming] (
 
   // ---- master state (generation-switchover mode) ------------------
   // Driver-side like the reference master; guarded by genLock because
-  // multiple sources' micro-batches can deliver concurrently.
+  // multiple sources' micro-batches can deliver concurrently. One
+  // controller per timeline: `None` is the cluster-wide timeline every
+  // source shares, `Some(table)` a tablet-model table's own
+  // (one TableCDCController's state each — TableCDCController.java:23-24).
   private val genLock = new Object
-  private var currentGen: Option[CdcGeneration] = None
-  private var switches: Vector[Int] = Vector.empty
-  private var genDelivered: Map[Int, Long] = Map.empty
-  // tablet model: the same three, keyed per table (one
-  // TableCDCController's state each — TableCDCController.java:23-24)
-  private var tableCurrent: Map[String, CdcGeneration] = Map.empty
-  private var tableSwitches: Map[String, Vector[Int]] = Map.empty
-  private var tableDelivered: Map[(String, Int), Long] = Map.empty
+  private var controllers: Map[Option[String], GenController] = Map.empty
+
+  private def controller(timeline: Option[String]): GenController =
+    genLock.synchronized(controllers.getOrElse(timeline, GenController()))
 
   /** The generation currently being consumed (switchover mode). */
-  def currentGeneration: Option[CdcGeneration] = genLock.synchronized(currentGen)
+  def currentGeneration: Option[CdcGeneration] = controller(None).current
   /** configureWorkers order: each re-task's generation id, initial one
     * first. */
-  def generationSwitches: Seq[Int] = genLock.synchronized(switches)
+  def generationSwitches: Seq[Int] = controller(None).switches
   /** Per-generation callback delivery counts (replays under the retry
     * path count like the callback sees them). */
-  def generationProgress: Map[Int, Long] = genLock.synchronized(genDelivered)
+  def generationProgress: Map[Int, Long] = controller(None).delivered
 
   /** Tablet model: the generation a TABLE is currently consuming. */
-  def currentGeneration(table: String): Option[CdcGeneration] =
-    genLock.synchronized(tableCurrent.get(table))
+  def currentGeneration(table: String): Option[CdcGeneration] = controller(Some(table)).current
   /** Tablet model: a table's re-task order (initial tasking first). */
-  def generationSwitches(table: String): Seq[Int] =
-    genLock.synchronized(tableSwitches.getOrElse(table, Vector.empty))
+  def generationSwitches(table: String): Seq[Int] = controller(Some(table)).switches
   /** Tablet model: a table's per-generation delivery counts. */
-  def generationProgress(table: String): Map[Int, Long] =
-    genLock.synchronized(tableDelivered.collect {
-      case ((t, gid), n) if t == table => gid -> n
-    })
+  def generationProgress(table: String): Map[Int, Long] = controller(Some(table)).delivered
 
   /** Index of the generation containing time t: the last one with
     * startUs <= t (generations are contiguous and sorted). Changes
@@ -394,36 +389,24 @@ final class GraftCdcConsumer private[streaming] (
   private def genIndexOf(gens: Vector[CdcGeneration], tUs: Long): Int =
     math.max(gens.lastIndexWhere(_.startUs <= tUs), 0)
 
-  /** Re-task onto generation g if it's ahead of the current one — the
-    * runMasterLoop advance + configureWorkers step. Monotone: a
-    * straggler delivered past the confidence window (Spark late-data
-    * semantics) never drags the master backwards. */
-  private def advanceTo(g: CdcGeneration): Unit = genLock.synchronized {
-    if (!currentGen.exists(_.startUs >= g.startUs)) {
-      currentGen = Some(g)
-      switches :+= g.generationId
-      generationListener(g)
+  /** Re-task a timeline onto generation g if it's ahead of its current
+    * one — the runMasterLoop advance + configureWorkers step (per table:
+    * TableCDCController.runMasterStep → advanceToNextGeneration;
+    * other timelines are untouched). Monotone: a straggler delivered
+    * past the confidence window (Spark late-data semantics) never drags
+    * the master backwards. */
+  private def advanceTo(timeline: Option[String], g: CdcGeneration): Unit = genLock.synchronized {
+    val c = controller(timeline)
+    if (!c.current.exists(_.startUs >= g.startUs)) {
+      controllers += timeline -> c.copy(current = Some(g), switches = c.switches :+ g.generationId)
+      timeline.fold(generationListener(g))(tableGenerationListener(_, g))
     }
   }
 
-  private def countDelivered(gid: Int): Unit = genLock.synchronized {
-    genDelivered = genDelivered.updated(gid, genDelivered.getOrElse(gid, 0L) + 1L)
-  }
-
-  /** Per-table advance — one table's runMasterStep outcome
-    * (TableCDCController.runMasterStep → advanceToNextGeneration +
-    * configureWorkers); other tables' controllers are untouched. */
-  private def advanceTableTo(table: String, g: CdcGeneration): Unit = genLock.synchronized {
-    if (!tableCurrent.get(table).exists(_.startUs >= g.startUs)) {
-      tableCurrent += table -> g
-      tableSwitches += table -> (tableSwitches.getOrElse(table, Vector.empty) :+ g.generationId)
-      tableGenerationListener(table, g)
-    }
-  }
-
-  private def countTableDelivered(table: String, gid: Int): Unit = genLock.synchronized {
-    tableDelivered = tableDelivered.updated((table, gid),
-      tableDelivered.getOrElse((table, gid), 0L) + 1L)
+  private def countDelivered(timeline: Option[String], gid: Int): Unit = genLock.synchronized {
+    val c = controller(timeline)
+    controllers += timeline ->
+      c.copy(delivered = c.delivered.updated(gid, c.delivered.getOrElse(gid, 0L) + 1L))
   }
 
   /** The delivery pipeline of the FIRST source as a streaming Dataset
@@ -517,10 +500,9 @@ final class GraftCdcConsumer private[streaming] (
             // timeline resolution: this table's own controller (tablet
             // model) beats the cluster-wide timeline; build() enforces
             // at most one model is configured
-            tableGenerations.get(sourceName).map(g => (g, true))
-              .orElse(generations.map(g => (g, false)))
-              .orElse(discoveredTimeline.map(g => (g, false))) match {
-              case Some((gens, perTable)) =>
+            tableGenerations.get(sourceName).map(g => (g, Some(sourceName)))
+              .orElse(generations.orElse(discoveredTimeline).map(g => (g, None))) match {
+              case Some((gens, timeline)) =>
                 // switchover mode: stable-sort the batch by generation
                 // (keeps (streamId, seqNo) order within each one) —
                 // the watermark guarantees no later batch carries an
@@ -528,13 +510,8 @@ final class GraftCdcConsumer private[streaming] (
                 // completely, re-tasks, then begins gen N+1
                 fresh.sortBy(d => genIndexOf(gens, d.timeUs)).foreach { d =>
                   val g = gens(genIndexOf(gens, d.timeUs))
-                  if (perTable) {
-                    advanceTableTo(sourceName, g)
-                    countTableDelivered(sourceName, g.generationId)
-                  } else {
-                    advanceTo(g)
-                    countDelivered(g.generationId)
-                  }
+                  advanceTo(timeline, g)
+                  countDelivered(timeline, g.generationId)
                   cb(d)
                 }
               case None => fresh.foreach(cb)
@@ -572,9 +549,9 @@ final class GraftCdcConsumer private[streaming] (
     // (GenerationBasedCDCMetadataModel.java:33-45); tablet model runs
     // the same init PER TABLE (initCurrentGeneration for each
     // controller, TabletBasedCDCMetadataModel.java:33-35)
-    generations.foreach(gens => advanceTo(gens.head))
+    generations.foreach(gens => advanceTo(None, gens.head))
     sources.foreach { case (name, _) =>
-      tableGenerations.get(name).foreach(gens => advanceTableTo(name, gens.head))
+      tableGenerations.get(name).foreach(gens => advanceTo(Some(name), gens.head))
     }
     // supplier mode: the master THREAD discovers the timeline (the
     // reference's MasterThread) — initial configureWorkers fires when
@@ -584,7 +561,7 @@ final class GraftCdcConsumer private[streaming] (
         val v = validateTimeline(gens)
         val first = discoveredTimeline.isEmpty
         discoveredTimeline = Some(v)
-        if (first) advanceTo(v.head)
+        if (first) advanceTo(None, v.head)
         firstTimelineLatch.countDown()
       })
       master = Some(m)
@@ -619,6 +596,11 @@ final class GraftCdcConsumer private[streaming] (
 
   override def close(): Unit = stop()
 }
+
+/** One generation timeline's master state: the generation being
+  * consumed, the re-task order, per-generation delivery counts. */
+private final case class GenController(current: Option[CdcGeneration] = None,
+    switches: Vector[Int] = Vector.empty, delivered: Map[Int, Long] = Map.empty)
 
 object GraftCdcConsumer {
   def builder(spark: SparkSession): GraftCdcConsumerBuilder =

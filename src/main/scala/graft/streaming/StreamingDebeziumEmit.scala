@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.cdc.DebeziumAdapter
+import graft.cdc.{ChangeOrder, DebeziumAdapter}
 
 /** STREAMING twin of [[graft.cdc.DebeziumAdapter.toDebeziumEnvelopes]]
   * — the source connector's steady state: consume the CDC stream and
@@ -61,8 +61,7 @@ object StreamingDebeziumEmit {
         .withColumn("h_sid", sid).withColumn("h_t", t).withColumn("h_e", e)
         .join(broadcast(m), col("h_sid") === col("m_sid"), "left")
         .filter(col("m_sid").isNull ||
-          col("h_t") > col("m_t") ||
-          (col("h_t") === col("m_t") && col("h_e") > col("m_e")))
+          ChangeOrder.isAfter(col("h_t"), col("h_e"), col("m_t"), col("m_e")))
         .select(col("key"), col("value"), col("topic"), col("headers"))
     }
   }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.cdc.CdcSchema
+import graft.cdc.{CdcSchema, ChangeOrder}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
@@ -14,8 +13,8 @@ import org.apache.spark.sql.types._
   * replay cost O(new changes + snapshot), never O(log).
   *
   * Ordering honesty across micro-batches: the merge NEVER lets the
-  * batch blindly win — the survivor per key is the larger
-  * (last_write_us, last_event_id), so late (out-of-order) changes
+  * batch blindly win — the survivor per key is the later
+  * (last_write_us, last_event_id) in ChangeId order, so late (out-of-order) changes
   * delivered in a later micro-batch cannot clobber a newer write that
   * arrived earlier, and re-merging a replayed batch is a no-op
   * (idempotent under at-least-once delivery). Deleted keys persist as
@@ -48,30 +47,26 @@ object StreamingSnapshotMerge {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snapshotSchema)
 
   /** Reduce a raw CDC-log slice to its one winning change per key
-    * (row writes only; deletes become tombstone rows). */
-  def reduceSlice(slice: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("time_us").desc, col("event_id").desc)
-    slice
-      .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    * (row writes only; deletes become tombstone rows) — the batch
+    * operators' fold, [[ChangeOrder.latestPerKey]], run on the slice. */
+  def reduceSlice(slice: DataFrame): DataFrame =
+    ChangeOrder.latestPerKey(
+        slice.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         col("value"), col("props"),
         (col("cdc_operation") === RowDelete).as("deleted"))
-  }
 
   /** Merge a reduced slice onto a snapshot — pure and idempotent;
-    * per key the larger (last_write_us, last_event_id) survives. */
+    * per key the later change in ChangeId order survives. */
   def mergeReduced(snapshot: DataFrame, reduced: DataFrame): DataFrame = {
     val dataCols = snapshotSchema.fieldNames.filterNot(_ == "user_id")
     val s = dataCols.foldLeft(snapshot) { (df, c) => df.withColumnRenamed(c, s"s_$c") }
     val b = dataCols.foldLeft(reduced) { (df, c) => df.withColumnRenamed(c, s"b_$c") }
     val batchWins = col("s_last_event_id").isNull ||
-      (col("b_last_event_id").isNotNull &&
-        struct(col("b_last_write_us"), col("b_last_event_id")) >
-          struct(col("s_last_write_us"), col("s_last_event_id")))
+      (col("b_last_event_id").isNotNull && ChangeOrder.isAfter(
+        col("b_last_write_us"), col("b_last_event_id"),
+        col("s_last_write_us"), col("s_last_event_id")))
     s.join(b, Seq("user_id"), "full_outer")
       .select(col("user_id") +: dataCols.map(c =>
         when(batchWins, col(s"b_$c")).otherwise(col(s"s_$c")).as(c)): _*)

@@ -286,6 +286,66 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  /** (Exchange, Window, Sort) nodes in each CDC entry's physical plan
+    * at sf0.001 — the initial adaptive plan, counted before execution.
+    * Measured once and pinned: a rewrite of the CDC operators that adds
+    * or drops a shuffle, a window or a sort fails here. */
+  private val cdcPlanShapes: Map[String, (Int, Int, Int)] = Map(
+    "cdc_batch_group" -> ((3, 0, 1)),
+    "cdc_checkpoint" -> ((2, 0, 3)),
+    "cdc_collection_apply" -> ((3, 7, 4)),
+    "cdc_collection_apply_list" -> ((3, 10, 6)),
+    "cdc_collection_apply_udt" -> ((2, 4, 3)),
+    "cdc_compaction" -> ((2, 2, 2)),
+    "cdc_debezium_emit" -> ((4, 2, 5)),
+    "cdc_debezium_emit_lanes" -> ((3, 1, 2)),
+    "cdc_debezium_rejects" -> ((2, 0, 1)),
+    "cdc_debezium_replicate" -> ((2, 1, 3)),
+    "cdc_dlq" -> ((3, 2, 3)),
+    "cdc_generation_assign" -> ((4, 0, 1)),
+    "cdc_generation_progress" -> ((3, 0, 1)),
+    "cdc_lag_report" -> ((2, 0, 1)),
+    "cdc_log_adapter" -> ((1, 0, 1)),
+    "cdc_mv_join" -> ((27, 15, 33)),
+    "cdc_mv_maintain" -> ((8, 4, 11)),
+    "cdc_mv_minmax" -> ((29, 14, 29)),
+    "cdc_mv_topk" -> ((65, 36, 77)),
+    "cdc_operation_decode" -> ((2, 0, 1)),
+    "cdc_partition_delete" -> ((4, 1, 3)),
+    "cdc_postimage_apply" -> ((2, 1, 3)),
+    "cdc_preimage_check" -> ((2, 1, 2)),
+    "cdc_range_delete" -> ((2, 2, 2)),
+    "cdc_replica_checksum" -> ((3, 1, 3)),
+    "cdc_replicate_full" -> ((6, 3, 4)),
+    "cdc_replicate_lww" -> ((2, 1, 3)),
+    "cdc_replicate_ttl" -> ((2, 1, 3)),
+    "cdc_scd2_history" -> ((2, 2, 2)),
+    "cdc_snapshot_merge" -> ((3, 2, 5)),
+    "cdc_stream_ordering" -> ((2, 1, 3)),
+    "cdc_stream_stats" -> ((6, 0, 1)),
+    "cdc_time_travel" -> ((3, 1, 3)),
+    "cdc_ttl_trim" -> ((2, 0, 1)),
+    "cdc_vnode_group" -> ((3, 0, 1)),
+    "cdc_window_scan" -> ((2, 0, 1)))
+
+  test("every cdc entry keeps its pinned physical plan shape") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    object plans extends AdaptiveSparkPlanHelper
+    def shape(p: SparkPlan): (Int, Int, Int) = (
+      plans.collect(p) { case e: Exchange => e }.size,
+      plans.collect(p) { case w: WindowExec => w }.size,
+      plans.collect(p) { case s: SortExec => s }.size)
+    val cdcNames = SparkEntry.queries.keySet.filter(_.startsWith("cdc_"))
+    assert(cdcNames == cdcPlanShapes.keySet)
+    cdcNames.toSeq.sorted.foreach { name =>
+      val got = shape(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      assert(got == cdcPlanShapes(name), s"$name: (exchanges, windows, sorts)")
+    }
+  }
+
   test("unpartitioned windows only ever run over aggregated day-grain relations") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Window => LWindow}
     // an UNPARTITIONED window moves every input row into one task — it

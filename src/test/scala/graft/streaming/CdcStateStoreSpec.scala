@@ -231,6 +231,72 @@ class CdcStateStoreSpec extends SparkSpec {
     }
   }
 
+  test("a micro-batch's marks reach the store as one batched write; a reopened FileStateStore sees every mark") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    /** Counts writes, tagging each batched write with the streaming
+      * batch id of the thread that made it. */
+    final class CountingStore extends CdcStateStore {
+      private val inner = new InMemoryStateStore
+      val puts = new java.util.concurrent.atomic.AtomicInteger
+      val batchedWrites = new ConcurrentLinkedQueue[(String, Int)]()
+      override def get(streamId: Long): Option[StreamProgress] = inner.get(streamId)
+      override def put(streamId: Long, p: StreamProgress): Unit = {
+        puts.incrementAndGet(); inner.put(streamId, p)
+      }
+      override def putAll(marks: Map[Long, StreamProgress]): Unit = {
+        batchedWrites.add((String.valueOf(
+          spark.sparkContext.getLocalProperty("streaming.sql.batchId")), marks.size))
+        marks.foreach { case (id, p) => inner.put(id, p) }
+      }
+      override def all(): Map[Long, StreamProgress] = inner.all()
+      override def clear(): Unit = inner.clear()
+    }
+    val rows = (1 to 40).map(i => Delivered(i % 8L, ms(i), i.toLong, 2, 0.0, i.toLong))
+    val recorders = Seq[(String, (Seq[Delivered], CdcStateStore) => Unit)](
+      "record" -> ((rs, st) => CdcCheckpoints.record(rs.toDS(), st)),
+      "recordRows" -> ((rs, st) => CdcCheckpoints.recordRows(rs, st)))
+    recorders.foreach { case (name, recordTo) =>
+      val s = new CountingStore
+      recordTo(rows, s)
+      assert(s.puts.get == 0 && s.batchedWrites.asScala.map(_._2).toSeq == Seq(8), name)
+      // a batch that moves no mark writes nothing
+      recordTo(rows.take(5), s)
+      assert(s.batchedWrites.size == 1, name)
+      // the durable store: one batch of marks, every one back after a reopen
+      val path = java.nio.file.Files.createTempDirectory("graft_state_batch").resolve("p.bin")
+      val file = new FileStateStore(path)
+      recordTo(rows, file)
+      assert(new FileStateStore(path).all() == s.all(), name)
+      assert(s.all().size == 8)
+    }
+
+    // end to end: exactly one batched write per micro-batch that
+    // delivered changes, and no per-stream put
+    val store = new CountingStore
+    val deliveredIn = new ConcurrentLinkedQueue[String]()
+    val in = MemoryStream[Change]
+    val c = GraftCdcConsumer.builder(spark)
+      .withSource(in.toDS())
+      .withConsumer(_ => deliveredIn.add(
+        String.valueOf(spark.sparkContext.getLocalProperty("streaming.sql.batchId"))))
+      .withStateStore(store)
+      .withQueryTimeWindowSizeMs(100)
+      .withQueryName(s"store_batched_${System.nanoTime()}")
+      .build()
+    try {
+      c.start()
+      for (k <- 1 to 3) {
+        in.addData((1 to 12).map(i => Change(i % 6L, ms(k * 100000L + i), k * 100L + i, 2, 0.0)))
+        c.processAllAvailable()
+      }
+    } finally c.stop()
+    val writes = store.batchedWrites.asScala.toSeq
+    assert(writes.nonEmpty && store.puts.get == 0)
+    assert(writes.map(_._1) == deliveredIn.asScala.toSeq.distinct, writes)
+    assert(store.all().size == 6)
+  }
+
   test("two sources run under one lifecycle with independent checkpoints") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
