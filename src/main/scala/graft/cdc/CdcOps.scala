@@ -19,6 +19,7 @@ object CdcOps {
 
   import CdcSchema._
   import ChangeOrder.{latestPerKey, livePerKey, newestFirst, oldestFirst}
+  import MvAlgebra._
 
   /** Epoch of the synthetic log (2024-01-01T00:00:00Z) in µs — the
     * "generation start" analogue for window arithmetic. */
@@ -256,15 +257,10 @@ object CdcOps {
     * -7 // 10 = -1) — invisible on the non-negative testdata but real
     * on the advertised bring-your-own-log surfaces (r11 ADVICE item).
     * Exact integer arithmetic for a positive constant divisor; used
-    * everywhere a key or cents value is bucketed ([[checksumFrame]],
-    * [[mvMaintainFromLog]], [[mvMinMaxFromLog]], and the streaming
-    * maintainer's contributions). */
+    * everywhere a key or cents value is bucketed ([[checksumFrame]]
+    * and the MV family's bucket / tier key in [[MvAlgebra]]). */
   private[graft] def floorDivSql(a: String, b: Long): String =
     s"(($a) div $b - (CASE WHEN ($a) % $b < 0 THEN 1 ELSE 0 END))"
-
-  /** `value` in exact integer cents — the checksum's and the MV
-    * family's arithmetic. */
-  private val Cents: Column = (col("value").cast("decimal(18,2)") * 100).cast("long")
 
   /** Checksum any conforming materialized state: needs `user_id`,
     * `value`, `last_event_id`. */
@@ -530,31 +526,44 @@ object CdcOps {
   /** Same operator over ANY log relation carrying the collection
     * triple (`attrs`, `cdc_deleted_elements_attrs`,
     * `cdc_deleted_attrs`). */
-  def collectionApplyFromLog(log: DataFrame): DataFrame = {
+  def collectionApplyFromLog(log: DataFrame): DataFrame =
+    liveElements(liveEpoch(log, "attrs"), "attrs")
+      .select(col("user_id"), col("key"), col("val").as("attr_value"))
+      .orderBy(col("user_id"), col("key"))
+
+  /** The live epoch of collection cell `cell` (its value,
+    * `cdc_deleted_elements_<cell>` and `cdc_deleted_<cell>` columns):
+    * changes sequenced per key as `rn`, the last whole-cell overwrite
+    * opening the epoch, only the epoch's changes kept. */
+  private def liveEpoch(log: DataFrame, cell: String): DataFrame = {
     val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
     val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val staged = log
+    log
       .select(col("user_id"), col("time_us"), col("event_id"),
-        col("attrs"), col("cdc_deleted_elements_attrs"), col("cdc_deleted_attrs"))
+        col(cell), col(s"cdc_deleted_elements_$cell"), col(s"cdc_deleted_$cell"))
       .withColumn("rn", row_number().over(seqW).cast("long"))
-      .withColumn("epoch", max(when(col("cdc_deleted_attrs"), col("rn"))).over(cum))
+      .withColumn("epoch", max(when(col(s"cdc_deleted_$cell"), col("rn"))).over(cum))
       .withColumn("last_epoch", max(col("epoch")).over(Window.partitionBy(col("user_id"))))
       // null-safe: keys never overwritten live in the null epoch
       .filter(col("epoch") <=> col("last_epoch"))
-    val puts = staged.filter(col("cdc_deleted_elements_attrs").isNull)
-      .select(col("user_id"), col("rn"), explode(map_entries(col("attrs"))).as("kv"))
+  }
+
+  /** A map-shaped cell's live elements (user_id, rn, key, val, ...):
+    * puts and element deletes explode to (key, element) grain, and an
+    * element survives when its newest action in the epoch is a put. */
+  private def liveElements(staged: DataFrame, cell: String): DataFrame = {
+    val deletedElements = col(s"cdc_deleted_elements_$cell")
+    val puts = staged.filter(deletedElements.isNull)
+      .select(col("user_id"), col("rn"), explode(map_entries(col(cell))).as("kv"))
       .select(col("user_id"), col("rn"), col("kv.key").as("key"),
         col("kv.value").as("val"), lit(1).as("act"))
-    val dels = staged.filter(col("cdc_deleted_elements_attrs").isNotNull)
-      .select(col("user_id"), col("rn"),
-        explode(col("cdc_deleted_elements_attrs")).as("key"),
+    val dels = staged.filter(deletedElements.isNotNull)
+      .select(col("user_id"), col("rn"), explode(deletedElements).as("key"),
         lit(null).cast("double").as("val"), lit(0).as("act"))
     val wElem = Window.partitionBy(col("user_id"), col("key")).orderBy(col("rn").desc)
     puts.unionByName(dels)
       .withColumn("r", row_number().over(wElem))
       .filter(col("r") === 1 && col("act") === 1)
-      .select(col("user_id"), col("key"), col("val").as("attr_value"))
-      .orderBy(col("user_id"), col("key"))
   }
 
   /** Oracle: same fold in SQL, deriving the synthetic collection ops
@@ -613,35 +622,14 @@ object CdcOps {
   /** Same operator over ANY log relation carrying the list triple
     * (`items` map<bigint,double> with timeuuid-like keys,
     * `cdc_deleted_elements_items`, `cdc_deleted_items`). */
-  def collectionApplyListFromLog(log: DataFrame): DataFrame = {
-    val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
-    val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val staged = log
-      .select(col("user_id"), col("time_us"), col("event_id"),
-        col("items"), col("cdc_deleted_elements_items"), col("cdc_deleted_items"))
-      .withColumn("rn", row_number().over(seqW).cast("long"))
-      .withColumn("epoch", max(when(col("cdc_deleted_items"), col("rn"))).over(cum))
-      .withColumn("last_epoch", max(col("epoch")).over(Window.partitionBy(col("user_id"))))
-      .filter(col("epoch") <=> col("last_epoch"))
-    val puts = staged.filter(col("cdc_deleted_elements_items").isNull)
-      .select(col("user_id"), col("rn"), explode(map_entries(col("items"))).as("kv"))
-      .select(col("user_id"), col("rn"), col("kv.key").as("key"),
-        col("kv.value").as("val"), lit(1).as("act"))
-    val dels = staged.filter(col("cdc_deleted_elements_items").isNotNull)
-      .select(col("user_id"), col("rn"),
-        explode(col("cdc_deleted_elements_items")).as("key"),
-        lit(null).cast("double").as("val"), lit(0).as("act"))
-    val wElem = Window.partitionBy(col("user_id"), col("key")).orderBy(col("rn").desc)
-    puts.unionByName(dels)
-      .withColumn("r", row_number().over(wElem))
-      .filter(col("r") === 1 && col("act") === 1)
+  def collectionApplyListFromLog(log: DataFrame): DataFrame =
+    liveElements(liveEpoch(log, "items"), "items")
       // the key-order sort IS the list materialization: surviving
       // timeuuid keys in order become positions 1..n
       .withColumn("pos", row_number()
         .over(Window.partitionBy(col("user_id")).orderBy(col("key"))).cast("int"))
       .select(col("user_id"), col("pos"), col("val").as("item"))
       .orderBy(col("user_id"), col("pos"))
-  }
 
   /** Oracle: the list fold in SQL, deriving the synthetic list ops
     * from `events` directly (mirrors
@@ -700,15 +688,7 @@ object CdcOps {
     * (`udt` struct<f0,f1,f2>, `cdc_deleted_elements_udt` array<int>
     * of field indices, `cdc_deleted_udt`). */
   def collectionApplyUdtFromLog(log: DataFrame): DataFrame = {
-    val seqW = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
-    val cum = seqW.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val staged = log
-      .select(col("user_id"), col("time_us"), col("event_id"),
-        col("udt"), col("cdc_deleted_elements_udt"), col("cdc_deleted_udt"))
-      .withColumn("rn", row_number().over(seqW).cast("long"))
-      .withColumn("epoch", max(when(col("cdc_deleted_udt"), col("rn"))).over(cum))
-      .withColumn("last_epoch", max(col("epoch")).over(Window.partitionBy(col("user_id"))))
-      .filter(col("epoch") <=> col("last_epoch"))
+    val staged = liveEpoch(log, "udt")
     val deleted = coalesce(col("cdc_deleted_elements_udt"), array().cast("array<int>"))
     def action(j: Int, v: org.apache.spark.sql.Column) = struct(
       lit(j).as("j"), v.isNotNull.as("is_set"), array_contains(deleted, j).as("is_del"),
@@ -1304,21 +1284,6 @@ object CdcOps {
     * both the snapshot and the incremental batch are non-trivial. */
   val SnapshotCutoffUs: Long = GenerationStartUs + 15L * 86400 * 1000000
 
-  /** The incremental operators' stored T0 state: live rows as of
-    * `cutoffUs` (changes at or before it). */
-  private def t0State(writes: DataFrame, cutoffUs: Long, key: String): DataFrame =
-    livePerKey(writes.filter(col("time_us") <= cutoffUs), key)
-
-  /** The incremental operators' slice verdict: each touched key's
-    * newest change after `cutoffUs`, a tombstone when it is a delete. */
-  private def sliceVerdict(writes: DataFrame, cutoffUs: Long, key: String): DataFrame =
-    latestPerKey(writes.filter(col("time_us") > cutoffUs), key)
-
-  /** The bucket MVs' T0 state: (user_id, cents, bucket). */
-  private def bucketedT0(writes: DataFrame, cutoffUs: Long): DataFrame =
-    t0State(writes, cutoffUs, "user_id").select(col("user_id"), Cents.as("cents"))
-      .withColumn("bucket", expr(floorDivSql("cents", MvBucketCents)))
-
   /** #14d: incremental snapshot merge — the CDC→lakehouse pattern: a
     * base-table SNAPSHOT materialized up to T0 has a later log slice
     * (T0, now] MERGEd onto it, yielding the state a full replay would
@@ -1344,7 +1309,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation with an
     * arbitrary snapshot cutoff — bring your own log. */
   def snapshotMergeFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
-    val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    val writes = rowWrites(log)
     // the stored snapshot: last-writer-wins state at T0 (deleted keys absent)
     val snapshot = t0State(writes, cutoffUs, "user_id")
       .select(col("user_id"), col("event_id").as("s_event_id"), col("time_us").as("s_time_us"),
@@ -1398,6 +1363,11 @@ object CdcOps {
        |ORDER BY user_id""".stripMargin
 
   // ------------------------------------------------------------ incremental MV maintenance
+  //
+  // The MV operators below and their streaming twins compose one
+  // algebra, [[MvAlgebra]]: every rule they share (cents, keys, T0
+  // state, editions, deltas, the recompute rule, the action tag) is
+  // written there once.
 
   /** Value units (in cents of `value`) per materialized-view bucket:
     * the MV's group key is `floor(value / 50.00)`, computed in exact
@@ -1449,44 +1419,20 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation with an
     * arbitrary slice start — bring your own log. */
   def mvMaintainFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
-    val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    val writes = rowWrites(log)
     // stored T0 state (the replicator's output at T0): LWW per key,
     // deleted keys absent — value carried as exact integer cents
     val s0 = t0State(writes, cutoffUs, "user_id").select(col("user_id"), Cents.as("cents"))
     // the slice verdict per touched key: its final op + final cents
-    val batch = sliceVerdict(writes, cutoffUs, "user_id")
-      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
+    val batch = verdictCents(sliceVerdict(writes, cutoffUs, "user_id"))
     // retract T0 contributions of touched keys; insert end-of-slice
     // contributions (none when the slice ends in a tombstone)
-    val oldC = s0.join(batch.select(col("user_id")), Seq("user_id"), "left_semi")
-      .select(expr(floorDivSql("cents", MvBucketCents)).as("bucket"),
-        lit(-1L).as("d_n"), (-col("cents")).as("d_cents"))
-    val newC = batch.filter(col("b_op") =!= RowDelete)
-      .select(expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"),
-        lit(1L).as("d_n"), col("b_cents").as("d_cents"))
-    val delta = oldC.unionByName(newC)
-      .groupBy(col("bucket"))
-      .agg(sum(col("d_n")).as("d_n"), sum(col("d_cents")).as("d_cents"))
+    val deltaRows = retract(s0.join(batch.select(col("user_id")), Seq("user_id"), "left_semi"),
+        bucketOf("cents").as("bucket"), "cents")
+      .unionByName(insert(batch.filter(col("b_op") =!= RowDelete),
+        bucketOf("b_cents").as("bucket"), "b_cents"))
     // the stored MV (maintained from the same T0 state)
-    val base = s0
-      .groupBy(expr(floorDivSql("cents", MvBucketCents)).as("bucket"))
-      .agg(count(lit(1)).as("base_n"), sum(col("cents")).as("base_cents"))
-    base.join(delta, Seq("bucket"), "full_outer")
-      .withColumn("n_rows", coalesce(col("base_n"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-      .withColumn("new_cents",
-        coalesce(col("base_cents"), lit(0L)) + coalesce(col("d_cents"), lit(0L)))
-      // a bucket born AND emptied inside the slice never existed in
-      // either MV edition — emit nothing for it
-      .filter(col("n_rows") > 0 || col("base_n").isNotNull)
-      .withColumn("mv_action",
-        when(col("base_n").isNull, "created")
-          .when(col("n_rows") === 0, "emptied")
-          .when(col("n_rows") === col("base_n") && col("new_cents") === col("base_cents"),
-            "carried")
-          .otherwise("updated"))
-      .select(col("bucket"), col("mv_action"), col("n_rows"),
-        (col("new_cents").cast("double") / 100.0).as("sum_value"))
-      .orderBy(col("bucket"))
+    sumView(sumCount(s0, bucketOf("cents").as("bucket"), "cents"), deltaRows, "bucket")
   }
 
   /** #14l: MIN/MAX MV maintenance — the NON-self-maintainable case
@@ -1513,52 +1459,20 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log. */
   def mvMinMaxFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
-    val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    val writes = rowWrites(log)
     val s0 = bucketedT0(writes, cutoffUs)
-    val base = s0.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("base_n"), min(col("cents")).as("base_mn"),
-        max(col("cents")).as("base_mx"))
-    val batch = sliceVerdict(writes, cutoffUs, "user_id")
-      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
-    val newRows = batch.filter(col("b_op") =!= RowDelete)
-      .select(col("user_id"), col("b_cents").as("cents"),
-        expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"))
-    // every bucket a touched key's OLD or NEW contribution lands in
-    val touchedBuckets = s0
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_semi")
-      .select(col("bucket"))
-      .unionByName(newRows.select(col("bucket")))
-      .distinct()
-    // recompute exactly those buckets from their surviving rows
-    val keptRows = s0
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_anti")
-      .join(touchedBuckets, Seq("bucket"), "left_semi")
-      .select(col("bucket"), col("cents"))
-    val recomputed = keptRows.unionByName(newRows.select(col("bucket"), col("cents")))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("new_n"), min(col("cents")).as("new_mn"),
-        max(col("cents")).as("new_mx"))
-    val untouched = base.join(touchedBuckets, Seq("bucket"), "left_anti")
-      .select(col("bucket"), lit("carried").as("mv_action"),
-        col("base_n").as("n_rows"),
-        (col("base_mn").cast("double") / 100.0).as("min_value"),
-        (col("base_mx").cast("double") / 100.0).as("max_value"))
-    val touched = touchedBuckets
-      .join(base, Seq("bucket"), "left")
-      .join(recomputed, Seq("bucket"), "left")
-      .withColumn("n_rows", coalesce(col("new_n"), lit(0L)))
-      .withColumn("mv_action",
-        when(col("base_n").isNull, "created")
-          .when(col("n_rows") === 0, "emptied")
-          .when(col("n_rows") === col("base_n") && col("new_mn") === col("base_mn")
-            && col("new_mx") === col("base_mx"), "carried")
-          .otherwise("updated"))
-      // a bucket born AND emptied inside the slice never existed
-      .filter(col("n_rows") > 0 || col("base_n").isNotNull)
-      .select(col("bucket"), col("mv_action"), col("n_rows"),
-        (col("new_mn").cast("double") / 100.0).as("min_value"),
-        (col("new_mx").cast("double") / 100.0).as("max_value"))
-    untouched.unionByName(touched).orderBy(col("bucket"))
+    val base = minMax(s0, "cents")("base_n", "base_mn", "base_mx")
+    val batch = verdictCents(sliceVerdict(writes, cutoffUs, "user_id"))
+    val keys = batch.select(col("user_id"))
+    val newRows = landed(batch)
+    val touched = touchedBuckets(s0, keys, newRows)
+    // recompute the touched buckets from their surviving rows
+    val (untouched, recomputed) =
+      recomputeTouched(base, touched, s0.join(keys, Seq("user_id"), "left_anti"))(rows =>
+        minMax(rows.select(col("bucket"), col("cents"))
+          .unionByName(newRows.select(col("bucket"), col("cents"))), "cents")(
+          "new_n", "new_mn", "new_mx"))
+    minMaxView(touched, base, untouched, recomputed)
   }
 
   /** Oracle: the full-log recompute, min/max edition. */
@@ -1611,13 +1525,9 @@ object CdcOps {
     * partition-pruned — the claim [[mvMinMaxFromLog]]'s scaladoc
     * makes, as a code path. */
   def writeMvSnapshot(log: DataFrame, cutoffUs: Long, dir: String): Unit = {
-    val s0 = bucketedT0(
-      log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), cutoffUs)
+    val s0 = bucketedT0(rowWrites(log), cutoffUs)
     s0.write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/snapshot")
-    s0.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("base_n"), min(col("cents")).as("base_mn"),
-        max(col("cents")).as("base_mx"))
-      .write.mode("overwrite").parquet(s"$dir/mv")
+    minMax(s0, "cents")("base_n", "base_mn", "base_mx").write.mode("overwrite").parquet(s"$dir/mv")
   }
 
   /** #14l against the STORED layout ([[writeMvSnapshot]]): maintain
@@ -1641,57 +1551,28 @@ object CdcOps {
   def mvMinMaxFromStored(spark: SparkSession, dir: String, slice: DataFrame): DataFrame = {
     val snapshot = spark.read.parquet(s"$dir/snapshot")
     val base = spark.read.parquet(s"$dir/mv")
-    val batch = latestPerKey(
-        slice.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
-      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
+    val batch = verdictCents(latestPerKey(rowWrites(slice), "user_id"))
       .localCheckpoint() // feeds the bucket probe, the key anti-join and the new rows
-    val newRows = batch.filter(col("b_op") =!= RowDelete)
-      .select(col("user_id"), col("b_cents").as("cents"),
-        expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"))
+    val keys = batch.select(col("user_id"))
+    val newRows = landed(batch)
     // touched buckets → driver literal (MV-grain metadata; loud cap).
     // The partition column comes back via partition-directory type
     // inference (int for small buckets) — normalize to long AFTER the
     // scan so the literal filter below still binds to the raw
     // partition column and prunes statically.
-    val touched: Array[Long] = snapshot
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_semi")
-      .select(col("bucket").cast("long").as("bucket"))
-      .unionByName(newRows.select(col("bucket")))
-      .distinct().collect().map(_.getLong(0))
-    require(touched.length <= MvMaxTouchedBuckets,
-      s"touched-bucket set ${touched.length} exceeds $MvMaxTouchedBuckets — " +
-        "bucket granularity is not MV-grain; fix the layout, don't widen the cap")
+    val touched = cappedLiterals(
+      touchedBuckets(snapshot.withColumn("bucket", col("bucket").cast("long")), keys, newRows),
+      "touched-bucket set", "bucket granularity is not MV-grain").toIndexedSeq
     // the recompute scan: STATICALLY partition-pruned to touched buckets
     val keptRows = snapshot
-      .filter(col("bucket").isin(touched.toIndexedSeq: _*))
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_anti")
+      .filter(col("bucket").isin(touched: _*))
+      .join(keys, Seq("user_id"), "left_anti")
       .select(col("bucket").cast("long").as("bucket"), col("cents"))
-    val recomputed = keptRows.unionByName(newRows.select(col("bucket"), col("cents")))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("new_n"), min(col("cents")).as("new_mn"),
-        max(col("cents")).as("new_mx"))
-    val untouched = base.filter(!col("bucket").isin(touched.toIndexedSeq: _*))
-      .select(col("bucket"), lit("carried").as("mv_action"),
-        col("base_n").as("n_rows"),
-        (col("base_mn").cast("double") / 100.0).as("min_value"),
-        (col("base_mx").cast("double") / 100.0).as("max_value"))
-    val touchedDf = spark.createDataset(touched.toIndexedSeq)(
+    val recomputed = minMax(keptRows.unionByName(newRows.select(col("bucket"), col("cents"))),
+      "cents")("new_n", "new_mn", "new_mx")
+    val touchedDf = spark.createDataset(touched)(
       org.apache.spark.sql.Encoders.scalaLong).toDF("bucket")
-    val touchedOut = touchedDf
-      .join(base, Seq("bucket"), "left")
-      .join(recomputed, Seq("bucket"), "left")
-      .withColumn("n_rows", coalesce(col("new_n"), lit(0L)))
-      .withColumn("mv_action",
-        when(col("base_n").isNull, "created")
-          .when(col("n_rows") === 0, "emptied")
-          .when(col("n_rows") === col("base_n") && col("new_mn") === col("base_mn")
-            && col("new_mx") === col("base_mx"), "carried")
-          .otherwise("updated"))
-      .filter(col("n_rows") > 0 || col("base_n").isNotNull)
-      .select(col("bucket"), col("mv_action"), col("n_rows"),
-        (col("new_mn").cast("double") / 100.0).as("min_value"),
-        (col("new_mx").cast("double") / 100.0).as("max_value"))
-    untouched.unionByName(touchedOut).orderBy(col("bucket"))
+    minMaxView(touchedDf, base, base.filter(!col("bucket").isin(touched: _*)), recomputed)
   }
 
   /** Oracle: the FULL-LOG recompute the incremental path must equal —
@@ -1766,15 +1647,14 @@ object CdcOps {
     * is the full two-relation recompute — the gate proves
     * incremental ≡ replay, action for action. */
   def mvJoinMaintain(spark: SparkSession, dir: String): DataFrame = {
-    val writes = cdcLog(spark, dir)
-      .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    val log = cdcLog(spark, dir)
     // the shared feed split into a fact log (user grain) and a sparse
     // dimension log (segment grain, ~1/17 of writes): deterministic,
     // reproduced literally by the oracle
-    val rLog = writes.filter(col("event_id") % 17 =!= 0)
+    val rLog = log.filter(col("event_id") % 17 =!= 0)
       .select(col("user_id"), (col("user_id") % 100).as("segment_id"),
         col("event_id"), col("time_us"), col("cdc_operation"), Cents.as("cents"))
-    val sLog = writes.filter(col("event_id") % 17 === 0)
+    val sLog = log.filter(col("event_id") % 17 === 0)
       .select((col("user_id") % 100).as("segment_id"),
         col("event_id"), col("time_us"), col("cdc_operation"), Cents.as("tier_cents"))
     mvJoinMaintainFromLogs(rLog, sLog, SnapshotCutoffUs)
@@ -1783,65 +1663,37 @@ object CdcOps {
   /** Same operator over ANY conforming pair of logs — bring your own.
     * `rLog`: (user_id, segment_id, event_id, time_us, cdc_operation,
     * cents); `sLog`: (segment_id, event_id, time_us, cdc_operation,
-    * tier_cents). LWW per key by (time_us, event_id) within each. */
+    * tier_cents). LWW per key by (time_us, event_id) within each,
+    * over row writes only: an image row is not a write. */
   def mvJoinMaintainFromLogs(rLog: DataFrame, sLog: DataFrame, cutoffUs: Long): DataFrame = {
+    val (rW, sW) = (rowWrites(rLog), rowWrites(sLog))
     // T0 fact state + the fact slice's per-key verdict
-    val r0 = t0State(rLog, cutoffUs, "user_id")
+    val r0 = t0State(rW, cutoffUs, "user_id")
       .select(col("user_id"), col("segment_id"), col("cents"))
-    val dR = sliceVerdict(rLog, cutoffUs, "user_id")
+    val dR = sliceVerdict(rW, cutoffUs, "user_id")
       .select(col("user_id"), col("segment_id"), col("cdc_operation").as("r_op"), col("cents"))
     // T0 dimension state + the dimension slice's per-key verdict
-    val s0 = t0State(sLog, cutoffUs, "segment_id").select(col("segment_id"), col("tier_cents"))
-    val dS = sliceVerdict(sLog, cutoffUs, "segment_id")
+    val s0 = t0State(sW, cutoffUs, "segment_id").select(col("segment_id"), col("tier_cents"))
+    val dS = sliceVerdict(sW, cutoffUs, "segment_id")
       .select(col("segment_id"), col("cdc_operation").as("s_op"), col("tier_cents"))
-    // the updated dimension: untouched segments carry their T0 row
-    val s1 = s0.join(dS.select(col("segment_id")), Seq("segment_id"), "left_anti")
-      .unionByName(dS.filter(col("s_op") =!= RowDelete)
-        .select(col("segment_id"), col("tier_cents")))
     val touchedUsers = dR.select(col("user_id"))
-    val touchedSegs = dS.select(col("segment_id"))
     // the COHORT: untouched fact rows whose segment's dimension row
     // changed — the join-MV-only fanout term
     val cohort = r0.join(touchedUsers, Seq("user_id"), "left_anti")
-      .join(touchedSegs, Seq("segment_id"), "left_semi")
-    val tierT = expr(floorDivSql("tier_cents", MvTierCents)).as("t")
+      .join(dS.select(col("segment_id")), Seq("segment_id"), "left_semi")
     // retract T0 contributions (against the T0 dimension) of every
     // affected fact row; insert end-of-slice contributions (against
     // the updated dimension) — a slice ending in a tombstone, or a
     // segment whose dimension row was deleted, inserts nothing
-    val retract = r0.join(touchedUsers, Seq("user_id"), "left_semi")
-      .unionByName(cohort)
-      .join(s0, Seq("segment_id"))
-      .select(tierT, lit(-1L).as("d_n"), (-col("cents")).as("d_cents"))
-    val insert = dR.filter(col("r_op") =!= RowDelete)
-      .select(col("user_id"), col("segment_id"), col("cents"))
-      .unionByName(cohort)
-      .join(s1, Seq("segment_id"))
-      .select(tierT, lit(1L).as("d_n"), col("cents").as("d_cents"))
-    val delta = retract.unionByName(insert)
-      .groupBy(col("t"))
-      .agg(sum(col("d_n")).as("d_n"), sum(col("d_cents")).as("d_cents"))
+    val deltaRows = joinRetract(
+        r0.join(touchedUsers, Seq("user_id"), "left_semi").unionByName(cohort), s0)
+      .unionByName(joinInsert(dR.filter(col("r_op") =!= RowDelete)
+        .select(col("user_id"), col("segment_id"), col("cents"))
+        .unionByName(cohort), updatedDim(s0, dS)))
     // the stored MV (the T0 join's aggregate — read, not recomputed,
     // in a stored deployment)
-    val base = r0.join(s0, Seq("segment_id"))
-      .groupBy(tierT)
-      .agg(count(lit(1)).as("base_n"), sum(col("cents")).as("base_cents"))
-    base.join(delta, Seq("t"), "full_outer")
-      .withColumn("n_rows",
-        coalesce(col("base_n"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-      .withColumn("new_cents",
-        coalesce(col("base_cents"), lit(0L)) + coalesce(col("d_cents"), lit(0L)))
-      // a tier group born AND emptied inside the slice never existed
-      .filter(col("n_rows") > 0 || col("base_n").isNotNull)
-      .withColumn("mv_action",
-        when(col("base_n").isNull, "created")
-          .when(col("n_rows") === 0, "emptied")
-          .when(col("n_rows") === col("base_n") && col("new_cents") === col("base_cents"),
-            "carried")
-          .otherwise("updated"))
-      .select(col("t"), col("mv_action"), col("n_rows"),
-        (col("new_cents").cast("double") / 100.0).as("sum_value"))
-      .orderBy(col("t"))
+    sumView(sumCount(r0.join(s0, Seq("segment_id")), tierOf("tier_cents").as("t"), "cents"),
+      deltaRows, "t")
   }
 
   /** Oracle: the full TWO-RELATION recompute the incremental path must
@@ -1906,14 +1758,13 @@ object CdcOps {
     * scaladoc makes, as a code path. */
   def writeMvJoinSnapshot(rLog: DataFrame, sLog: DataFrame, cutoffUs: Long,
       dir: String): Unit = {
-    val r0 = t0State(rLog, cutoffUs, "user_id")
+    val r0 = t0State(rowWrites(rLog), cutoffUs, "user_id")
       .select(col("user_id"), col("cents"), col("segment_id"))
-    val s0 = t0State(sLog, cutoffUs, "segment_id").select(col("segment_id"), col("tier_cents"))
+    val s0 = t0State(rowWrites(sLog), cutoffUs, "segment_id")
+      .select(col("segment_id"), col("tier_cents"))
     r0.write.mode("overwrite").partitionBy("segment_id").parquet(s"$dir/fact")
     s0.write.mode("overwrite").parquet(s"$dir/dim")
-    r0.join(s0, Seq("segment_id"))
-      .groupBy(expr(floorDivSql("tier_cents", MvTierCents)).as("t"))
-      .agg(count(lit(1)).as("base_n"), sum(col("cents")).as("base_cents"))
+    sumCount(r0.join(s0, Seq("segment_id")), tierOf("tier_cents").as("t"), "cents")
       .write.mode("overwrite").parquet(s"$dir/mv")
   }
 
@@ -1934,57 +1785,29 @@ object CdcOps {
     val fact = spark.read.parquet(s"$dir/fact")
     val dim = spark.read.parquet(s"$dir/dim")
     val base = spark.read.parquet(s"$dir/mv")
-    val dR = latestPerKey(rSlice, "user_id")
+    val dR = latestPerKey(rowWrites(rSlice), "user_id")
       .select(col("user_id"), col("segment_id"), col("cdc_operation").as("r_op"),
         col("cents"))
       .localCheckpoint() // feeds the key lookup, the cohort anti-join and the inserts
-    val dS = latestPerKey(sSlice, "segment_id")
+    val dS = latestPerKey(rowWrites(sSlice), "segment_id")
       .select(col("segment_id"), col("cdc_operation").as("s_op"), col("tier_cents"))
       .localCheckpoint() // feeds the segment literal and the dimension update
     // touched segments → driver literal (dimension-grain metadata;
     // loud cap) pushed as a STATIC partition filter on the fact scan
     // cast-before-collect so a bring-your-own slice with an INT-typed
     // segment_id can't ClassCastException (mvMinMaxFromStored discipline)
-    val touchedSegs: Array[Long] = dS.select(col("segment_id").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    require(touchedSegs.length <= MvMaxTouchedBuckets,
-      s"touched-segment set ${touchedSegs.length} exceeds $MvMaxTouchedBuckets — " +
-        "the dimension key is not dimension-grain; fix the layout, don't widen the cap")
+    val touchedSegs = cappedLiterals(dS.select(col("segment_id").cast("long")).distinct(),
+      "touched-segment set", "the dimension key is not dimension-grain")
     val cohort = fact.filter(col("segment_id").isin(touchedSegs.toIndexedSeq: _*))
       .join(dR.select(col("user_id")), Seq("user_id"), "left_anti")
       .select(col("user_id"), col("segment_id").cast("long").as("segment_id"), col("cents"))
     val oldTouched = fact.join(dR.select(col("user_id")), Seq("user_id"), "left_semi")
       .select(col("user_id"), col("segment_id").cast("long").as("segment_id"), col("cents"))
-    val s1 = dim.join(dS.select(col("segment_id")), Seq("segment_id"), "left_anti")
-      .unionByName(dS.filter(col("s_op") =!= RowDelete)
-        .select(col("segment_id"), col("tier_cents")))
-    val tierT = expr(floorDivSql("tier_cents", MvTierCents)).as("t")
-    val retract = oldTouched.unionByName(cohort)
-      .join(dim, Seq("segment_id"))
-      .select(tierT, lit(-1L).as("d_n"), (-col("cents")).as("d_cents"))
-    val insert = dR.filter(col("r_op") =!= RowDelete)
-      .select(col("user_id"), col("segment_id"), col("cents"))
-      .unionByName(cohort)
-      .join(s1, Seq("segment_id"))
-      .select(tierT, lit(1L).as("d_n"), col("cents").as("d_cents"))
-    val delta = retract.unionByName(insert)
-      .groupBy(col("t"))
-      .agg(sum(col("d_n")).as("d_n"), sum(col("d_cents")).as("d_cents"))
-    base.join(delta, Seq("t"), "full_outer")
-      .withColumn("n_rows",
-        coalesce(col("base_n"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-      .withColumn("new_cents",
-        coalesce(col("base_cents"), lit(0L)) + coalesce(col("d_cents"), lit(0L)))
-      .filter(col("n_rows") > 0 || col("base_n").isNotNull)
-      .withColumn("mv_action",
-        when(col("base_n").isNull, "created")
-          .when(col("n_rows") === 0, "emptied")
-          .when(col("n_rows") === col("base_n") && col("new_cents") === col("base_cents"),
-            "carried")
-          .otherwise("updated"))
-      .select(col("t"), col("mv_action"), col("n_rows"),
-        (col("new_cents").cast("double") / 100.0).as("sum_value"))
-      .orderBy(col("t"))
+    val deltaRows = joinRetract(oldTouched.unionByName(cohort), dim)
+      .unionByName(joinInsert(dR.filter(col("r_op") =!= RowDelete)
+        .select(col("user_id"), col("segment_id"), col("cents"))
+        .unionByName(cohort), updatedDim(dim, dS)))
+    sumView(base, deltaRows, "t")
   }
 
   // ------------------------------------------------------------ top-k MV maintenance
@@ -2019,57 +1842,38 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log. */
   def mvTopkFromLog(log: DataFrame, cutoffUs: Long): DataFrame = {
-    val writes = log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
-    val wTk = Window.partitionBy(col("bucket"))
-      .orderBy(col("cents").desc, col("user_id").desc)
+    val writes = rowWrites(log)
     val s0 = bucketedT0(writes, cutoffUs)
     // the stored MV edition: T0 top-k rank rows per bucket
-    val baseTk = s0.withColumn("rk", row_number().over(wTk))
-      .filter(col("rk") <= MvTopK)
-      .select(col("bucket"), col("rk"), col("cents"))
-    val batch = sliceVerdict(writes, cutoffUs, "user_id")
-      .select(col("user_id"), col("cdc_operation").as("b_op"), Cents.as("b_cents"))
-    val newRows = batch.filter(col("b_op") =!= RowDelete)
-      .select(col("user_id"), col("b_cents").as("cents"),
-        expr(floorDivSql("b_cents", MvBucketCents)).as("bucket"))
-    val touchedBuckets = s0
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_semi")
-      .select(col("bucket"))
-      .unionByName(newRows.select(col("bucket")))
-      .distinct()
+    val baseTk = topK(s0, "cents").select(col("bucket"), col("rk"), col("cents"))
+    val batch = verdictCents(sliceVerdict(writes, cutoffUs, "user_id"))
+    val keys = batch.select(col("user_id"))
+    val newRows = landed(batch)
+    val touched = touchedBuckets(s0, keys, newRows)
     // recompute the touched buckets' rank lists from survivor rows
-    val newTk = s0
-      .join(batch.select(col("user_id")), Seq("user_id"), "left_anti")
-      .join(touchedBuckets, Seq("bucket"), "left_semi")
-      .select(col("user_id"), col("cents"), col("bucket"))
-      .unionByName(newRows)
-      .withColumn("rk", row_number().over(wTk))
-      .filter(col("rk") <= MvTopK)
-      .select(col("bucket"), col("rk"), col("cents"))
+    val (untouchedTk, newTk) =
+      recomputeTouched(baseTk, touched, s0.join(keys, Seq("user_id"), "left_anti"))(rows =>
+        topK(rows.select(col("user_id"), col("cents"), col("bucket")).unionByName(newRows),
+          "cents").select(col("bucket"), col("rk"), col("cents")))
     // bucket-grain action: position-wise rank-list comparison
-    val act = baseTk.join(touchedBuckets, Seq("bucket"), "left_semi")
+    val act = baseTk.join(touched, Seq("bucket"), "left_semi")
       .withColumnRenamed("cents", "b_cents")
       .join(newTk.withColumnRenamed("cents", "n_cents"),
         Seq("bucket", "rk"), "full_outer")
       .groupBy(col("bucket"))
       .agg(count(col("b_cents")).as("n_old"), count(col("n_cents")).as("n_new"),
         sum(when(!(col("b_cents") <=> col("n_cents")), 1L).otherwise(0L)).as("n_diff"))
-      .withColumn("mv_action",
-        when(col("n_old") === 0, "created")
-          .when(col("n_new") === 0, "emptied")
-          .when(col("n_diff") === 0, "carried")
-          .otherwise("updated"))
-      .select(col("bucket"), col("mv_action"))
+      .select(col("bucket"),
+        action(col("n_old") === 0, col("n_new"), col("n_diff") === 0).as("mv_action"))
     val touchedOut = newTk.join(act, Seq("bucket"))
       .select(col("bucket"), col("rk").cast("long").as("rk"), col("mv_action"),
-        (col("cents").cast("double") / 100.0).as("value"))
+        asValue("cents").as("value"))
     val emptiedOut = act.filter(col("mv_action") === "emptied")
       .select(col("bucket"), lit(0L).as("rk"), col("mv_action"),
         lit(null).cast("double").as("value"))
-    val untouchedOut = baseTk.join(touchedBuckets, Seq("bucket"), "left_anti")
+    val untouchedOut = untouchedTk
       .select(col("bucket"), col("rk").cast("long").as("rk"),
-        lit("carried").as("mv_action"),
-        (col("cents").cast("double") / 100.0).as("value"))
+        lit("carried").as("mv_action"), asValue("cents").as("value"))
     touchedOut.unionByName(emptiedOut).unionByName(untouchedOut)
       .orderBy(col("bucket"), col("rk"))
   }

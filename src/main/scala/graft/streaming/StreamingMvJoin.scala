@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.cdc.MvAlgebra.{Cents, asValue, foldLive, joinInsert, joinRetract}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -23,7 +24,8 @@ import org.apache.spark.sql.types._
   * contributions (post-fact ⋈ post-dim) insert. A dimension write
   * therefore moves its whole cohort between MV groups with no fact
   * row in the batch, and a dimension delete drops the cohort —
-  * inner-join semantics, exactly the batch operator.
+  * inner-join semantics, exactly the batch operator: the retract /
+  * insert rules and the fold are its own, from [[graft.cdc.MvAlgebra]].
   *
   * Idempotency is INHERITED: a replayed batch merges as a no-op, so
   * pre ≡ post, retract ≡ insert, and the delta is exactly zero.
@@ -49,7 +51,7 @@ object StreamingMvJoin {
     * cents) in exact integer cents. */
   private def factRows(state: DataFrame, segmentOf: Column): DataFrame =
     state.filter(!col("deleted"))
-      .withColumn("cents", (col("value").cast("decimal(18,2)") * 100).cast("long"))
+      .withColumn("cents", Cents)
       .withColumn("segment_id", segmentOf)
       .select(col("user_id"), col("segment_id"), col("cents"))
 
@@ -57,8 +59,7 @@ object StreamingMvJoin {
     * `user_id` = segment): (segment_id, tier_cents). */
   private def dimRows(state: DataFrame): DataFrame =
     state.filter(!col("deleted"))
-      .select(col("user_id").as("segment_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("tier_cents"))
+      .select(col("user_id").as("segment_id"), Cents.as("tier_cents"))
 
   /** One micro-batch of the join delta rules over the pre/post state
     * pairs. `touchedUsers`: the fact batch's keys; `touchedSegs`: the
@@ -76,22 +77,16 @@ object StreamingMvJoin {
       .unionByName(postF.join(touchedSegs, Seq("segment_id"), "left_semi")
         .select(col("user_id")))
       .distinct()
-    val tierT = expr(graft.cdc.CdcOps.floorDivSql("tier_cents",
-      graft.cdc.CdcOps.MvTierCents)).as("t")
-    val retract = preF.join(affected, Seq("user_id"), "left_semi")
-      .join(dimRows(preDim), Seq("segment_id"))
-      .select(tierT, lit(-1L).as("d_n"), (-col("cents")).as("d_cents"))
-    val insert = postF.join(affected, Seq("user_id"), "left_semi")
-      .join(dimRows(postDim), Seq("segment_id"))
-      .select(tierT, lit(1L).as("d_n"), col("cents").as("d_cents"))
-    StreamingMvMaintain.foldDelta(mv, retract.unionByName(insert), "t", "sum_cents")
+    val retract = joinRetract(preF.join(affected, Seq("user_id"), "left_semi"), dimRows(preDim))
+    val insert = joinInsert(postF.join(affected, Seq("user_id"), "left_semi"), dimRows(postDim))
+    foldLive(mv, retract.unionByName(insert), "t", "sum_cents")
   }
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
     * transactional table keyed on `t`). Its view: (t, n_rows,
     * sum_value). */
   final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
-    .select(col("t"), col("n_rows"), (col("sum_cents").cast("double") / 100.0).as("sum_value"))
+    .select(col("t"), col("n_rows"), asValue("sum_cents").as("sum_value"))
     .orderBy(col("t")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame

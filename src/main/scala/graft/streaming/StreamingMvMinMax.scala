@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import StreamingMvMaintain.recomputeTouched
+import graft.cdc.MvAlgebra.{asValue, minMax, recomputeFromStates}
 
 /** STREAMING twin of [[graft.cdc.CdcOps.mvMinMaxFromLog]] — the
   * NON-self-maintainable MV (`bucket → COUNT, MIN, MAX`) maintained
@@ -19,7 +19,7 @@ import StreamingMvMaintain.recomputeTouched
   * full key state. So per batch the maintainer RECOMPUTES exactly the
   * touched buckets (the batch operator's answer, CdcOps.scala
   * mvMinMaxFromLog) from the POST-merge state and carries every other
-  * MV row untouched ([[StreamingMvMaintain.recomputeTouched]]): cost
+  * MV row untouched ([[graft.cdc.MvAlgebra.recomputeFromStates]]): cost
   * O(batch + rows of touched buckets + |MV|), never O(log) and never
   * a full-state re-aggregation. */
 object StreamingMvMinMax {
@@ -37,9 +37,8 @@ object StreamingMvMinMax {
     * POST-merge state, carry the rest of the MV verbatim. */
   def applyBatch(mv: DataFrame, preState: DataFrame, postState: DataFrame,
       touched: DataFrame): DataFrame =
-    recomputeTouched(mv, preState, postState, touched)(_.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_rows"), min(col("c")).as("mn_cents"),
-        max(col("c")).as("mx_cents")))
+    recomputeFromStates(mv, preState, postState, touched)(
+      minMax(_, "c")("n_rows", "mn_cents", "mx_cents"))
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
     * transactional table bucketed on `bucket` — the
@@ -47,8 +46,7 @@ object StreamingMvMinMax {
     * n_rows, min_value, max_value). */
   final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
     .select(col("bucket"), col("n_rows"),
-      (col("mn_cents").cast("double") / 100.0).as("min_value"),
-      (col("mx_cents").cast("double") / 100.0).as("max_value"))
+      asValue("mn_cents").as("min_value"), asValue("mx_cents").as("max_value"))
     .orderBy(col("bucket")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import StreamingMvMaintain.recomputeTouched
+import graft.cdc.MvAlgebra.{asValue, recomputeFromStates, topK}
 
 /** STREAMING twin of [[graft.cdc.CdcOps.mvTopkFromLog]] — the TOP-K
   * MV (`bucket → K largest values`) maintained continuously from the
@@ -21,7 +20,7 @@ import StreamingMvMaintain.recomputeTouched
   * full key state. So it shares the MIN/MAX twin's composition too:
   * the body [[StreamingSnapshotMerge.attachMv]], and per micro-batch
   * a recompute of exactly the touched buckets' rank lists from the
-  * POST-merge state ([[StreamingMvMaintain.recomputeTouched]]), every
+  * POST-merge state ([[graft.cdc.MvAlgebra.recomputeFromStates]]), every
   * other bucket's rank rows carried verbatim: cost O(batch + rows of
   * touched buckets + K·|MV|), never O(log) and never a full-state
   * re-rank. */
@@ -40,21 +39,16 @@ object StreamingMvTopk {
     * rank tiebreak is the batch operator's (cents DESC, user_id DESC),
     * so maintained and recomputed editions are value-identical. */
   def applyBatch(mv: DataFrame, preState: DataFrame, postState: DataFrame,
-      touched: DataFrame): DataFrame = {
-    val wTk = Window.partitionBy(col("bucket"))
-      .orderBy(col("c").desc, col("user_id").desc)
-    recomputeTouched(mv, preState, postState, touched)(_
-      .withColumn("rk", row_number().over(wTk))
-      .filter(col("rk") <= graft.cdc.CdcOps.MvTopK)
+      touched: DataFrame): DataFrame =
+    recomputeFromStates(mv, preState, postState, touched)(topK(_, "c")
       .select(col("bucket"), col("rk").cast("long").as("rk"), col("c").as("cents")))
-  }
 
   /** Driver-held MV for specs/smoke runs (production swaps into a
     * transactional table bucketed on `bucket` — the
     * [[graft.cdc.CdcOps.writeMvSnapshot]] layout). Its view: (bucket,
     * rk, value). */
   final class InMemoryMvStore(spark: SparkSession) extends FrameStore(emptyMv(spark), _
-    .select(col("bucket"), col("rk"), (col("cents").cast("double") / 100.0).as("value"))
+    .select(col("bucket"), col("rk"), asValue("cents").as("value"))
     .orderBy(col("bucket"), col("rk")))
 
   /** Attach the maintainer to a streaming CDC-log DataFrame

@@ -77,4 +77,27 @@ class MvJoinStoredSpec extends SparkSpec {
     assert(got == collected(CdcOps.mvJoinMaintainFromLogs(
       rLog.filter(col("time_us") <= T0), sLog.filter(col("time_us") <= T0), T0)))
   }
+
+  test("the stored operator keeps its pinned physical plan shape") {
+    val dir = java.nio.file.Files.createTempDirectory("mvj_stored3_").toString
+    CdcOps.writeMvJoinSnapshot(rLog, sLog, T0, dir)
+    val stored = CdcOps.mvJoinFromStored(spark, dir,
+      rLog.filter(col("time_us") > T0), sLog.filter(col("time_us") > T0))
+    val got = graft.PlanShape.of(stored)
+    assert(got == ((9, 0, 3)), "(exchanges, windows, sorts)")
+  }
+
+  test("a dimension slice touching more segments than the cap fails with the cap message") {
+    val dir = java.nio.file.Files.createTempDirectory("mvj_stored4_").toString
+    CdcOps.writeMvJoinSnapshot(rLog, sLog, T0, dir)
+    // one dimension write per segment, MvMaxTouchedBuckets + 1 segments
+    val sSlice = spark.range(CdcOps.MvMaxTouchedBuckets + 1L).select(
+      col("id").as("segment_id"), (col("id") + 100).as("event_id"),
+      lit(2000L).as("time_us"), lit(CdcSchema.RowUpdate).as("cdc_operation"),
+      lit(1000L).as("tier_cents"))
+    val e = intercept[IllegalArgumentException](CdcOps.mvJoinFromStored(spark, dir,
+      rLog.filter(col("time_us") > T0), sSlice))
+    assert(e.getMessage.contains(
+      s"touched-segment set exceeds ${CdcOps.MvMaxTouchedBuckets}"), e.getMessage)
+  }
 }

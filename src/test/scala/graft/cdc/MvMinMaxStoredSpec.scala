@@ -65,4 +65,25 @@ class MvMinMaxStoredSpec extends SparkSpec {
     assert(got.map(_._2).forall(_ == "carried"), got)
     assert(got == collected(CdcOps.mvMinMaxFromLog(log.filter(col("time_us") <= cutoffUs), cutoffUs)))
   }
+
+  test("the stored operator keeps its pinned physical plan shape") {
+    val dir = java.nio.file.Files.createTempDirectory("mv_stored3_").toString
+    CdcOps.writeMvSnapshot(log, cutoffUs, dir)
+    val stored = CdcOps.mvMinMaxFromStored(spark, dir, log.filter(col("time_us") > cutoffUs))
+    val got = graft.PlanShape.of(stored)
+    assert(got == ((5, 0, 1)), "(exchanges, windows, sorts)")
+  }
+
+  test("a slice touching more buckets than the cap fails with the cap message") {
+    val dir = java.nio.file.Files.createTempDirectory("mv_stored4_").toString
+    CdcOps.writeMvSnapshot(log, cutoffUs, dir)
+    // one new key per bucket, MvMaxTouchedBuckets + 1 buckets
+    val slice = spark.range(CdcOps.MvMaxTouchedBuckets + 1L).select(
+      (col("id") + 1000).as("user_id"), (col("id") + 1000).as("event_id"),
+      lit(200L).as("time_us"), lit(RowInsert).as("cdc_operation"),
+      (col("id") * 50.0).as("value"), lit("{}").as("props"))
+    val e = intercept[IllegalArgumentException](CdcOps.mvMinMaxFromStored(spark, dir, slice))
+    assert(e.getMessage.contains(
+      s"touched-bucket set exceeds ${CdcOps.MvMaxTouchedBuckets}"), e.getMessage)
+  }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.cdc.CdcSchema
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -64,5 +65,16 @@ class StreamingMvBatchJobsSpec extends SparkSpec {
       new StreamingSnapshotMerge.InMemorySnapshotStore(spark),
       new StreamingMvTopk.InMemoryMvStore(spark)))
     assert(got == Seq(11, 14, 14), got)
+  }
+
+  test("MvJoin twin: jobs per data micro-batch are pinned") {
+    // every third event id a dimension write, two segments, so each
+    // batch feeds both relations
+    val got = jobsPerBatch(StreamingMvJoin.attach(_,
+      new StreamingSnapshotMerge.InMemorySnapshotStore(spark),
+      new StreamingSnapshotMerge.InMemorySnapshotStore(spark),
+      new StreamingMvJoin.InMemoryMvStore(spark),
+      isDim = col("event_id") % 3 === 0, segmentOf = col("user_id") % 2))
+    assert(got == Seq(18, 25, 25), got)
   }
 }

@@ -155,4 +155,29 @@ class StreamingMvJoinSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+
+  test("an image row newest in the fact and the dimension slice is no write, batch and twin alike") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val isDim = col("event_id") % 17 === 0
+    val segOf = col("user_id") % 100
+    val changes = Seq(
+      MvChange(101L, 1L, 10L, RowInsert, 10.00, "{}"),  // fact seg 1
+      MvChange(102L, 2L, 20L, RowInsert, 30.00, "{}"),  // fact seg 2
+      MvChange(1L, 17L, 30L, RowInsert, 20.00, "{}"),   // dim seg 1 → t1
+      MvChange(2L, 34L, 40L, RowInsert, 40.00, "{}"),   // dim seg 2 → t2
+      // the newest change of fact key 101 and of dimension segment 2
+      // is an image row: it describes a write, it is not one
+      MvChange(101L, 3L, 50L, PostImage, 500.00, "{}"),
+      MvChange(2L, 51L, 60L, PreImage, 900.00, "{}"))
+    val input = MemoryStream[MvChange]
+    val factStore = new StreamingSnapshotMerge.InMemorySnapshotStore(spark)
+    val dimStore = new StreamingSnapshotMerge.InMemorySnapshotStore(spark)
+    val mvStore = new StreamingMvJoin.InMemoryMvStore(spark)
+    val q = StreamingMvJoin.attach(input.toDF(), factStore, dimStore, mvStore)
+    try { input.addData(changes); q.processAllAvailable() } finally q.stop()
+    val batch = replayMv(changes, isDim, segOf)
+    assert(batch == Set((1L, 1L, 10.00), (2L, 1L, 30.00)), batch)
+    assert(view(mvStore) == batch)
+  }
 }
