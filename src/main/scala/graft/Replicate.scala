@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
 /** End-to-end replicator CLI — the analogue of running the reference's
   * scylla-cdc-replicator Main (source cluster → destination cluster).
   *
@@ -14,6 +17,15 @@ package graft
   *    audit written to `preimage_report`;
   *  - `postimage`: POST_IMAGE full-row applies — the destination
   *    state as `postimage_table`.
+  *
+  * Output contract: each output holds exactly its operator's rows
+  * (`CdcOps.replicateFullFromLog`, `collectionApplyFromLog`,
+  * `preimageCheckFromLog`, `postimageApplyFromLog`). Each parquet file
+  * is sorted by the output's key; there is no order across files, so a
+  * reader that needs one global order sorts on read. The two delta
+  * outputs are written at the same time. The operators themselves
+  * still return their rows in one global key order.
+  *
   * At 100 TB the same lines run on a cluster with the parquet paths
   * pointed at the lake. */
 object Replicate {
@@ -29,28 +41,37 @@ object Replicate {
     case other => throw new IllegalArgumentException(s"unrecognized arguments: $other")
   }
 
+  /** One output: its rows in any order, the key each file is sorted by,
+    * and where it goes. */
+  private[graft] final case class Output(rows: DataFrame, key: Seq[String], path: String)
+
   /** One replication run; returns the written output paths. */
-  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      out: String, mode: String): Seq[String] = {
+  def run(spark: SparkSession, sfDir: String, out: String, mode: String): Seq[String] = {
     val events = Tables.events(spark, sfDir)
     val log = cdc.CdcLogAdapter.fromEvents(events)
-    mode match {
-      case "delta" =>
-        cdc.CdcOps.replicateFullFromLog(log)
-          .write.mode("overwrite").parquet(s"$out/destination_table")
-        cdc.CdcOps.collectionApplyFromLog(cdc.CdcLogAdapter.fromEventsWithCollections(events))
-          .write.mode("overwrite").parquet(s"$out/destination_collections")
-        Seq(s"$out/destination_table", s"$out/destination_collections")
-      case "preimage" =>
-        cdc.CdcOps.preimageCheckFromLog(log)
-          .write.mode("overwrite").parquet(s"$out/preimage_report")
-        Seq(s"$out/preimage_report")
-      case "postimage" =>
-        cdc.CdcOps.postimageApplyFromLog(log)
-          .write.mode("overwrite").parquet(s"$out/postimage_table")
-        Seq(s"$out/postimage_table")
+    val outputs = mode match {
+      case "delta" => Seq(
+        Output(cdc.CdcOps.replicateFullCore(log), Seq("user_id", "ck"),
+          s"$out/destination_table"),
+        Output(cdc.CdcOps.collectionApplyCore(cdc.CdcLogAdapter.fromEventsWithCollections(events)),
+          Seq("user_id", "key"), s"$out/destination_collections"))
+      case "preimage" => Seq(
+        Output(cdc.CdcOps.preimageCheckCore(log), Seq("user_id", "event_id"),
+          s"$out/preimage_report"))
+      case "postimage" => Seq(
+        Output(cdc.CdcOps.postimageApplyCore(log), Seq("user_id"), s"$out/postimage_table"))
     }
+    write(spark, outputs)
+    outputs.map(_.path)
   }
+
+  /** Writes the outputs at the same time, each file sorted by its key
+    * (a sort inside each write task: no sample job, no range exchange). */
+  private[graft] def write(spark: SparkSession, outputs: Seq[Output]): Unit =
+    Concurrently(spark)(outputs.map { o => () =>
+      o.rows.sortWithinPartitions(o.key.map(col): _*)
+        .write.mode("overwrite").parquet(o.path)
+    })
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Replicate <sfDir> <outDir> [--mode delta|preimage|postimage]")

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object CdcOps {
 
   import CdcSchema._
-  import ChangeOrder.{latestPerKey, livePerKey, newestFirst, oldestFirst}
+  import ChangeOrder.{latestPerKey, livePerKey, newestFirst, oldestFirst, rowWrites}
   import MvAlgebra._
 
   /** Epoch of the synthetic log (2024-01-01T00:00:00Z) in µs — the
@@ -204,7 +204,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
   def replicateLwwFromLog(log: DataFrame): DataFrame =
-    livePerKey(log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
+    livePerKey(rowWrites(log), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         col("value"), col("props"))
@@ -316,8 +316,7 @@ object CdcOps {
   def timeTravelFromLog(log: DataFrame): DataFrame = {
     import log.sparkSession.implicits._
     val cuts = TimeTravelCutoffs.toDF("as_of", "cutoff_us")
-    val beforeCut = log
-      .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    val beforeCut = rowWrites(log)
       // no broadcast HINT (the repo rule: no forced hints in cdc
       // operators — PlanGuardSpec); a 3-row LocalRelation broadcasts
       // on stats anyway
@@ -357,8 +356,7 @@ object CdcOps {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
     val pd = ckLog.filter(col("cdc_operation") === PartitionDelete)
       .groupBy(col("user_id")).agg(max(col("time_us")).as("pd_time_us"))
-    livePerKey(ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)),
-        "user_id", "ck")
+    livePerKey(rowWrites(ckLog), "user_id", "ck")
       // pd grows with the log (one row per delete-carrying partition) —
       // no forced hint: AQE broadcasts it while small and falls back to
       // a key shuffle once a delete-heavy log outgrows the driver.
@@ -450,7 +448,12 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
-  def preimageCheckFromLog(log: DataFrame): DataFrame = {
+  def preimageCheckFromLog(log: DataFrame): DataFrame =
+    preimageCheckCore(log).orderBy(col("user_id"), col("event_id"))
+
+  /** [[preimageCheckFromLog]]'s rows in no particular order — what
+    * [[graft.Replicate]] writes, sorted per file on (user_id, event_id). */
+  private[graft] def preimageCheckCore(log: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
     val isWrite = col("cdc_operation").isin(RowUpdate, RowInsert)
@@ -474,7 +477,6 @@ object CdcOps {
         (col("props") <=> col("prev.props")).as("props_match"),
         (col("prev").isNotNull && (col("value") <=> col("prev.value"))
           && (col("props") <=> col("prev.props"))).as("consistent"))
-      .orderBy(col("user_id"), col("event_id"))
   }
 
   val preimageCheckSql: String = CdcLogAdapter.oracleCte +
@@ -527,9 +529,13 @@ object CdcOps {
     * triple (`attrs`, `cdc_deleted_elements_attrs`,
     * `cdc_deleted_attrs`). */
   def collectionApplyFromLog(log: DataFrame): DataFrame =
+    collectionApplyCore(log).orderBy(col("user_id"), col("key"))
+
+  /** [[collectionApplyFromLog]]'s rows in no particular order — what
+    * [[graft.Replicate]] writes, sorted per file on (user_id, key). */
+  private[graft] def collectionApplyCore(log: DataFrame): DataFrame =
     liveElements(liveEpoch(log, "attrs"), "attrs")
       .select(col("user_id"), col("key"), col("val").as("attr_value"))
-      .orderBy(col("user_id"), col("key"))
 
   /** The live epoch of collection cell `cell` (its value,
     * `cdc_deleted_elements_<cell>` and `cdc_deleted_<cell>` columns):
@@ -758,10 +764,14 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
   def postimageApplyFromLog(log: DataFrame): DataFrame =
+    postimageApplyCore(log).orderBy(col("user_id"))
+
+  /** [[postimageApplyFromLog]]'s rows in no particular order — what
+    * [[graft.Replicate]] writes, sorted per file on user_id. */
+  private[graft] def postimageApplyCore(log: DataFrame): DataFrame =
     latestPerKey(log.filter(col("cdc_operation") === PostImage), "user_id")
       .select(col("user_id"), col("event_id"), col("time_us").as("applied_at_us"),
         col("value"), col("props"))
-      .orderBy(col("user_id"))
 
   val postimageApplySql: String = CdcLogAdapter.oracleCte +
     """SELECT user_id, event_id, time_us AS applied_at_us, value, props
@@ -928,7 +938,12 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation — bring your
     * own log (real cdc$ table, Kafka topic, adapter output). */
-  def replicateFullFromLog(log: DataFrame): DataFrame = {
+  def replicateFullFromLog(log: DataFrame): DataFrame =
+    replicateFullCore(log).orderBy(col("user_id"), col("ck"))
+
+  /** [[replicateFullFromLog]]'s rows in no particular order — what
+    * [[graft.Replicate]] writes, sorted per file on (user_id, ck). */
+  private[graft] def replicateFullCore(log: DataFrame): DataFrame = {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
     // last write per (user_id, ck): upserts 1/2 and postimage 9 set the
     // row, delete 3 tombstones it — newest wins
@@ -949,18 +964,24 @@ object CdcOps {
     val inRange =
       (col("ck") > col("left_ck") || (col("left_inclusive") && col("ck") === col("left_ck"))) &&
         (col("ck") < col("right_ck") || (col("right_inclusive") && col("ck") === col("right_ck")))
+    // The stream match is a residual, not a join key: hashed on
+    // user_id alone, a broadcast build side is a LongHashedRelation
+    // sized to the deletes, where a (stream, user) key would build an
+    // UnsafeHashedRelation with a fixed 16 MB page. A plain
+    // `stream === rd_stream` would be extracted back into the key;
+    // try_subtract is exact on any bigint (null on overflow, never 0).
+    val sameStream = try_subtract(col("cdc_stream_id"), col("rd_stream")) === 0
     // pd/rd are log-derived (grow with deletes) — no forced broadcast
     // hints; AQE picks broadcast only while the side is actually small.
     lastWrites
       .join(pd, Seq("user_id"), "left")
       .filter(col("pd_time_us").isNull || col("time_us") > col("pd_time_us"))
       .join(rd,
-        col("cdc_stream_id") === col("rd_stream") && col("user_id") === col("rd_user_id") &&
+        col("user_id") === col("rd_user_id") && sameStream &&
           inRange && col("time_us") <= col("applied_at_us"),
         "left_anti")
       .select(col("user_id"), col("ck"), col("time_us").as("last_write_us"),
         col("cdc_operation").as("last_op"), col("value"), col("props"))
-      .orderBy(col("user_id"), col("ck"))
   }
 
   val replicateFullSql: String = CdcLogAdapter.oracleCte +
@@ -1010,8 +1031,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation. */
   def replicateTtlFromLog(log: DataFrame): DataFrame = {
     val ckLog = log.withColumn("ck", (col("event_id") % 16).cast("int"))
-    livePerKey(ckLog.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)),
-        "user_id", "ck")
+    livePerKey(rowWrites(ckLog), "user_id", "ck")
       .withColumn("is_expired",
         col("cdc_ttl").isNotNull && col("time_us") + col("cdc_ttl") * 1000000L <= NowUs)
       .select(col("user_id"), col("ck"), col("time_us").as("last_write_us"),
@@ -1112,8 +1132,7 @@ object CdcOps {
 
   /** Same operator over ANY conforming CDC-log relation. */
   def compactionFromLog(log: DataFrame): DataFrame =
-    ChangeOrder.latestPerKeyCounted(
-        log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete)), "user_id")
+    ChangeOrder.latestPerKeyCounted(rowWrites(log), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         (col("cdc_operation") === RowDelete).as("is_tombstone"),
@@ -1255,7 +1274,7 @@ object CdcOps {
   /** Same operator over ANY conforming CDC-log relation. */
   def scd2HistoryFromLog(log: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(oldestFirst: _*)
-    log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+    rowWrites(log)
       .withColumn("valid_to_us", lead(col("time_us"), 1).over(w))
       .filter(col("cdc_operation") =!= RowDelete)
       .withColumn("version_no", row_number().over(w).cast("int"))

@@ -34,6 +34,13 @@ object ChangeOrder {
   def isAfter(time: Column, event: Column, lastTime: Column, lastEvent: Column): Column =
     time > lastTime || (time === lastTime && event > lastEvent)
 
+  /** The row writes of a log: ROW_UPDATE / INSERT / DELETE, the changes
+    * every last-writer-wins state is folded from. Pre- and post-image
+    * rows describe a write, they are not one. */
+  def rowWrites(log: DataFrame): DataFrame =
+    log.filter(col("cdc_operation").isin(CdcSchema.RowUpdate, CdcSchema.RowInsert,
+      CdcSchema.RowDelete))
+
   /** Log sort columns in delivery order, oldest change first. */
   val oldestFirst: Seq[Column] = Seq(col("time_us"), col("event_id"))
 

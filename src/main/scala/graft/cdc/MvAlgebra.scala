@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * once. The operators compose these pieces; none restates a rule.
   *
   *  - exact integer cents and the floor bucket / tier key;
-  *  - the changes an MV reads, its T0 state and its slice verdict;
+  *  - an MV's T0 state and its slice verdict over the row writes
+  *    ([[ChangeOrder.rowWrites]]);
   *  - each view kind's edition from rows: SUM/COUNT, MIN/MAX, top-K;
   *  - signed contribution rows and their SUM/COUNT fold (the
   *    self-maintainable kinds), the join delta rules on top of them;
@@ -35,12 +36,6 @@ private[graft] object MvAlgebra {
 
   /** The join MV's group key: floor(dimension cents / tier width). */
   def tierOf(cents: String): Column = expr(CdcOps.floorDivSql(cents, CdcOps.MvTierCents))
-
-  /** The changes an MV reads: row writes (ROW_UPDATE / INSERT /
-    * DELETE). Pre- and post-image rows describe a write, they are not
-    * one. */
-  def rowWrites(log: DataFrame): DataFrame =
-    log.filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
 
   /** The stored T0 state: live rows as of `cutoffUs` (changes at or
     * before it). */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.cdc.CdcSchema
+import graft.cdc.{CdcSchema, ChangeOrder}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -125,8 +125,7 @@ object StreamingScd2 {
     changes.writeStream
       .outputMode("append")
       .foreachBatch { (df: DataFrame, _: Long) =>
-        val batchW = df
-          .filter(col("cdc_operation").isin(RowUpdate, RowInsert, RowDelete))
+        val batchW = ChangeOrder.rowWrites(df)
           .select(writeCols.map(col): _*)
           .localCheckpoint() // one source read: feeds clock, fresh, touched
         val mx = batchW.agg(max(col("time_us"))).head()

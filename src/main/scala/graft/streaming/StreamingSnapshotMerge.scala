@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.cdc.{CdcSchema, ChangeOrder, MvAlgebra}
+import graft.cdc.{CdcSchema, ChangeOrder}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -50,7 +50,7 @@ object StreamingSnapshotMerge {
     * (row writes only; deletes become tombstone rows) — the batch
     * operators' fold, [[ChangeOrder.latestPerKey]], run on the slice. */
   def reduceSlice(slice: DataFrame): DataFrame =
-    ChangeOrder.latestPerKey(MvAlgebra.rowWrites(slice), "user_id")
+    ChangeOrder.latestPerKey(ChangeOrder.rowWrites(slice), "user_id")
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("time_us").as("last_write_us"), col("cdc_operation").as("last_op"),
         col("value"), col("props"),

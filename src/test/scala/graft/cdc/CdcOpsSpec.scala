@@ -2,6 +2,9 @@ package graft.cdc
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Edge-semantics spec for the replication operators over
@@ -10,7 +13,7 @@ import org.apache.spark.sql.functions._
   * oracle exercises only statistically:
   * resurrection after partition delete, range-bound inclusivity,
   * postimage-wins, delete-wins-over-older-write. */
-class CdcOpsSpec extends SparkSpec {
+class CdcOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   import CdcSchema._
 
@@ -62,6 +65,28 @@ class CdcOpsSpec extends SparkSpec {
     val out = CdcOps.replicateFullFromLog(log).collect()
       .map(r => (r.getAs[Int]("ck"), r.getAs[Double]("value"))).toSet
     assert(out == Set((8, 3.0), (6, 4.0)))
+  }
+
+  test("range delete masks only its own stream's write; the broadcast hashes user_id alone") {
+    // user 5 writes ck 4 on stream 2; a paired range delete of user 5
+    // covers ck 4 (left inclusive ck 4, right exclusive ck 8)
+    def log(rdStream: Long) = mkLog(Seq(
+      (2L, 10L, 4L, RowInsert, 5L, 1.0),
+      (rdStream, 50L, 20L, RangeDeleteInclLeft, 5L, 0.0),
+      (rdStream, 51L, 24L, RangeDeleteExclRight, 5L, 0.0)))
+    def cks(df: DataFrame) = df.collect().map(_.getAs[Int]("ck")).toSeq
+    // replicateFullSql pairs a write with a range delete of its own stream
+    assert(cks(CdcOps.replicateFullFromLog(log(3L))) == Seq(4))
+    val sameStream = CdcOps.replicateFullFromLog(log(2L))
+    assert(cks(sameStream).isEmpty)
+    // the stream match stays a residual predicate: one bigint key keeps
+    // the broadcast a LongHashedRelation, where two keys build an
+    // UnsafeHashedRelation with a fixed 16 MB page
+    val plan = sameStream.queryExecution.executedPlan
+    assert(plan.asInstanceOf[AdaptiveSparkPlanExec].isFinalPlan)
+    val rangeJoins = collect(plan) { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }
+    assert(rangeJoins.size == 1, plan)
+    assert(rangeJoins.head.leftKeys.size == 1, rangeJoins.head)
   }
 
   test("snapshot merge equals full replay at any cutoff; actions are honest") {
