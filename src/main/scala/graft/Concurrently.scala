@@ -16,14 +16,16 @@ import org.apache.spark.sql.execution.SQLExecution
   * Each thread carries the caller's Spark local properties (job group,
   * job description, scheduler pool, job tags) and active session, so
   * the jobs it starts are attributed, and cancellable, exactly as if
-  * the caller had run them. When an action fails, the jobs the others
-  * are running are cancelled; the call returns or throws only once
-  * every action has finished, so no job outlives it. */
+  * the caller had run them. The pool lives for one call: a long-lived
+  * pool's threads would keep the local properties of whichever thread
+  * created them. When an action fails, the jobs the others are running
+  * are cancelled; the call returns or throws only once every action has
+  * finished, so no job outlives it. */
 object Concurrently {
 
-  /** Runs the actions; the first failure is rethrown once every action
-    * has ended. */
-  def apply(spark: SparkSession)(actions: Seq[() => Unit]): Unit = {
+  /** Runs the actions and returns their results in order; the first
+    * failure is rethrown once every action has ended. */
+  def apply[T](spark: SparkSession)(actions: Seq[() => T]): Seq[T] = {
     val sc = spark.sparkContext
     val tag = s"graft-concurrently-${UUID.randomUUID()}"
     val failure = new AtomicReference[Throwable]()
@@ -43,6 +45,7 @@ object Concurrently {
       }
       runs.foreach(r => Try(r.join()))
       Option(failure.get).foreach(e => throw e)
+      runs.map(_.join())
     } finally pool.shutdown()
   }
 }

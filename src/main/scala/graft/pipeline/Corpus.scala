@@ -1129,21 +1129,15 @@ object Corpus {
     // those eager jobs serialize on the driver. Compose them on a
     // small thread pool instead (guide §2.6: overlap independent
     // jobs); each frame is deterministic, so results are unchanged.
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val d = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), col("source"))
-    // blocking{}: the compositions run eager Spark actions
-    // (localCheckpoint), so mark them for the shared pool (r13 ADVICE)
-    val ddF = Future(blocking(Dedup.keeplistFrame(spark, dir)
-      .select(col("doc_id"), col("keep").as("dedup_keep"))))
-    val qqF = Future(blocking(TextAnalysis.qualityFilterFrame(spark, dir)
-      .select(col("doc_id"), col("keep").as("quality_keep"))))
-    val spF = Future(blocking(Dedup.spanRewriteFrame(Tables.spread(Tables.documents(spark, dir)))
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"))))
-    val (dd, qq, sp) = (Await.result(ddF, Duration.Inf),
-      Await.result(qqF, Duration.Inf), Await.result(spF, Duration.Inf))
+    val Seq(dd, qq, sp) = graft.Concurrently(spark)(Seq(
+      () => Dedup.keeplistFrame(spark, dir)
+        .select(col("doc_id"), col("keep").as("dedup_keep")),
+      () => TextAnalysis.qualityFilterFrame(spark, dir)
+        .select(col("doc_id"), col("keep").as("quality_keep")),
+      () => Dedup.spanRewriteFrame(Tables.spread(Tables.documents(spark, dir)))
+        .select(col("doc_id"), col("n_tokens"), col("n_removed"))))
     d.join(dd, Seq("doc_id")).join(qq, Seq("doc_id")).join(sp, Seq("doc_id"))
       .withColumn("final_keep", col("dedup_keep") && col("quality_keep"))
       .groupBy(col("source"))

@@ -179,14 +179,7 @@ object EntityResolution {
     // the two schemes' perR materializations are independent eager
     // jobs — overlap them (guide §2.6); results are deterministic and
     // the union below keeps the fixed grid order
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // blocking{}: the future bodies run eager Spark actions
-    // (localCheckpoint); marking them lets the shared global pool grow
-    // past its core count instead of starving when these entries are
-    // composed under other futures (r13 ADVICE).
-    val gridF = for ((scheme, gap) <- SweepSchemes) yield Future { blocking {
+    val grid = graft.Concurrently(spark)(SweepSchemes.map { case (scheme, gap) => () =>
       val lsig = sigRows(left, "l_key", "ls", gap).repartition(par, col("sig"))
       val rsig = sigRows(right, "r_id", "rs", gap).repartition(par, col("sig"))
       val sigDf = lsig.groupBy(col("sig")).agg(count(lit(1)).as("df"))
@@ -243,8 +236,7 @@ object EntityResolution {
               .otherwise(expr("(1000000 * n_correct) div n_matches")).as("precision_e6"),
             expr(s"(1000000 * n_correct) div ${nTruth}L").as("recall_e6"))
       }
-    } }
-    val grid = gridF.map(Await.result(_, Duration.Inf))
+    })
     grid.flatten.reduce(_ unionByName _)
       .orderBy(col("scheme"), col("df_cap"), col("threshold_e6"))
   }

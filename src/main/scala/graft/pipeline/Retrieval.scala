@@ -504,31 +504,30 @@ object Retrieval {
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_eval").toString
     // the from-text edition never touches the index directory — its
     // composition (whose eager part is the tokenize→tf checkpoint)
-    // overlaps the write→add→add→eval→compact chain on the shared
-    // pool (guide §2.6, the cleanStats pattern; frames deterministic)
-    import scala.concurrent.{Await, Future, blocking}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fromTextF = Future(blocking(
-      evalFromParts(lexSystem(d), e, Some(dense)).withColumn("edition", lit("from_text"))))
-    Bm25Index.write(d.filter(col("doc_id") < Bm25Index.AddSplit), path)
-    val tail = d.filter(col("doc_id") >= Bm25Index.AddSplit)
-    Bm25Index.add(tail, path)
-    Bm25Index.add(tail, path) // replayed append: at-least-once ingestion
-    // The barrier against compact rewriting the directory underneath
-    // is the EAGER tf localCheckpoint inside lexPartsFromTf — after it
-    // nothing in this edition reads the parquet again, so the eval
-    // itself stays LAZY and its stages overlap with the compacted and
-    // from-text editions inside the one final action (r13 optimization
-    // round: the previous full-eval localCheckpoint here serialized an
-    // entire edition's evaluation before compact could even start).
-    val added = evalFromParts(lexPartsFromTf(Bm25Index.load(spark, path)), e, Some(dense))
-      .withColumn("edition", lit("added"))
-    Bm25Index.compact(spark, path)
-    val compacted = evalFromParts(lexPartsFromTf(Bm25Index.load(spark, path)), e, Some(dense))
-      .withColumn("edition", lit("compacted"))
-    val fromText = Await.result(fromTextF, Duration.Inf)
-    fromText.unionByName(added).unionByName(compacted)
+    // overlaps the write→add→add→eval→compact chain (guide §2.6, the
+    // cleanStats pattern; frames deterministic)
+    val Seq(fromText, indexed) = graft.Concurrently(spark)(Seq(
+      () => evalFromParts(lexSystem(d), e, Some(dense)).withColumn("edition", lit("from_text")),
+      () => {
+        Bm25Index.write(d.filter(col("doc_id") < Bm25Index.AddSplit), path)
+        val tail = d.filter(col("doc_id") >= Bm25Index.AddSplit)
+        Bm25Index.add(tail, path)
+        Bm25Index.add(tail, path) // replayed append: at-least-once ingestion
+        // The barrier against compact rewriting the directory underneath
+        // is the EAGER tf localCheckpoint inside lexPartsFromTf — after it
+        // nothing in this edition reads the parquet again, so the eval
+        // itself stays LAZY and its stages overlap with the compacted and
+        // from-text editions inside the one final action (r13 optimization
+        // round: the previous full-eval localCheckpoint here serialized an
+        // entire edition's evaluation before compact could even start).
+        val added = evalFromParts(lexPartsFromTf(Bm25Index.load(spark, path)), e, Some(dense))
+          .withColumn("edition", lit("added"))
+        Bm25Index.compact(spark, path)
+        added.unionByName(
+          evalFromParts(lexPartsFromTf(Bm25Index.load(spark, path)), e, Some(dense))
+            .withColumn("edition", lit("compacted")))
+      }))
+    fromText.unionByName(indexed)
       .select(col("edition"), col("query_id"), col("system"), col("hits_at_10"),
         col("total_relevant"), col("mrr_e9"), col("dcg_e9"), col("idcg_e9"))
       .orderBy(col("edition"), col("query_id"), col("system"))

@@ -329,21 +329,41 @@ class PlanGuardSpec extends SparkSpec {
     "cdc_window_scan" -> ((2, 0, 1)))
 
   test("every cdc entry keeps its pinned physical plan shape") {
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.window.WindowExec
-    object plans extends AdaptiveSparkPlanHelper
-    def shape(p: SparkPlan): (Int, Int, Int) = (
-      plans.collect(p) { case e: Exchange => e }.size,
-      plans.collect(p) { case w: WindowExec => w }.size,
-      plans.collect(p) { case s: SortExec => s }.size)
     val cdcNames = SparkEntry.queries.keySet.filter(_.startsWith("cdc_"))
     assert(cdcNames == cdcPlanShapes.keySet)
     cdcNames.toSeq.sorted.foreach { name =>
-      val got = shape(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+      val got = PlanShape.of(SparkEntry.queries(name)(spark, dir))
       assert(got == cdcPlanShapes(name), s"$name: (exchanges, windows, sorts)")
     }
+  }
+
+  /** Plan wins that were once shown only as committed explain text,
+    * counted on the planned sf0.001 plan: each Debezium entry parses
+    * its JSON once, RRF fuses its ranked lists with no sort-merge join,
+    * and DSIR selection keeps its hashed-feature folds at the measured
+    * count. A rewrite that adds any of these fails here. */
+  test("debezium parses once, rrf plans no sort-merge join, dsir keeps its fold count") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, JsonToStructs, Literal}
+    import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
+    import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    def plan(name: String) = SparkEntry.queries(name)(spark, dir)
+    // from_json plans as JsonToStructs, or as the Invoke of its
+    // evaluator once the optimizer has replaced it
+    Seq("cdc_debezium_replicate", "cdc_debezium_rejects").foreach { name =>
+      val fromJson = PlanShape.expressions(plan(name)) {
+        case j: JsonToStructs => j
+        case i: Invoke if (i.targetObject match {
+          case Literal(_: JsonToStructsEvaluator, _) => true
+          case _ => false
+        }) => i
+      }
+      assert(fromJson == 1, s"$name plans $fromJson from_json")
+    }
+    val smj = PlanShape.nodes(plan("retrieval_rrf")) { case j: SortMergeJoinExec => j }
+    assert(smj == 0, s"retrieval_rrf plans $smj sort-merge joins")
+    val folds = PlanShape.expressions(plan("corpus_dsir_select")) { case a: ArrayAggregate => a }
+    assert(folds <= 3, s"corpus_dsir_select plans $folds ArrayAggregate folds")
   }
 
   test("unpartitioned windows only ever run over aggregated day-grain relations") {

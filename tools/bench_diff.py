@@ -6,9 +6,9 @@ Usage: python3 tools/bench_diff.py OLD_BENCH.json NEW_BENCH.json
            [--json OUT] [--confirm] [--passes N]
 
 Input files are BENCH_LATEST-format: {"queries": {name: {"min": s,
-"passes": [s, s, s]}, ...}, ...}. With 180+ entries on a shared VM the
-pass-total spread runs +/-13%, so a bare min-over-min ratio at the 1.3x
-band flags noise. The model here requires BOTH of:
+"passes": [s, s, s], ...}, ...}, ...}. With 180+ entries on a shared
+VM the pass-total spread runs +/-13%, so a bare min-over-min ratio at
+the 1.3x band flags noise. The model here requires BOTH of:
 
   1. a session-drift-normalized min ratio beyond the threshold --
      drift is the median per-query min ratio across all common
@@ -20,6 +20,10 @@ band flags noise. The model here requires BOTH of:
      two (cf. q_moving_avg's [9.6, 1.2, 1.0] r10 passes: a 9.6s
      outlier pass with an unchanged min is noise, not regression).
 
+When both files carry an entry's work ("cpu_s", "jobs", as graft.Bench
+writes them), each flag prints it next to wall time: CPU seconds and
+job counts barely move with scheduler stalls.
+
 Queries under the absolute floor (min < 0.2 s in both runs) are never
 flagged -- sub-200ms timings on a shared VM are scheduler noise.
 Error-sentinel entries (Bench records min = -1.0 when any pass of a
@@ -28,9 +32,10 @@ and reported separately as "sentinels". Improvements are reported
 symmetrically (same criteria, inverted).
 
 --confirm adjudicates each flag with fresh data instead of leaving it
-open: it re-runs every flagged query in ISOLATION (graft.BenchOne,
-one warm JVM, N=--passes, default 5) together with up to 5 stable
-CONTROL queries (unflagged, >=0.5 s, normalized ratio nearest 1.0).
+open: it re-runs every flagged query in ISOLATION (graft.Bench given
+the entry names, one warm JVM, N=--passes, default 5) together with up
+to 5 stable CONTROL queries (unflagged, >=0.5 s, normalized ratio
+nearest 1.0).
 The controls calibrate isolation-vs-suite bias (isolated runs dodge
 suite neighbors, so they come in systematically faster); each flag's
 isolated min, rescaled by the control median, is then compared to the
@@ -57,6 +62,7 @@ import tempfile
 THRESHOLD = 1.3   # normalized min-ratio band
 MIDPOINT = 1.15   # confirm-mode noise boundary
 FLOOR = 0.2       # seconds; below this in both runs -> never flagged
+WORK = ("cpu_s", "jobs")  # per-entry work shown next to wall time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -94,6 +100,9 @@ def diff(old, new, threshold=THRESHOLD, floor=FLOOR):
             "ratio": round(n["min"] / o["min"], 3),
             "normalized_ratio": round(norm, 3),
         }
+        for key in WORK:
+            if key in o and key in n:
+                entry[f"old_{key}"], entry[f"new_{key}"] = o[key], n[key]
         if norm >= threshold and min(n["passes"]) > max(o["passes"]):
             regressions.append(entry)
         elif norm <= 1 / threshold and max(n["passes"]) < min(o["passes"]):
@@ -123,20 +132,21 @@ def pick_controls(old, new, flagged, n=5, min_s=0.5):
 
 
 def run_isolated(queries, passes):
-    """One BenchOne JVM over all queries; returns {name: min_seconds}."""
-    fd, out = tempfile.mkstemp(suffix="_benchone.json")
+    """One graft.Bench JVM over the named queries only; returns
+    {name: min_seconds}."""
+    fd, out = tempfile.mkstemp(suffix="_bench.json")
     os.close(fd)
-    os.unlink(out)  # BenchOne creates the file; mkstemp only reserved the name
+    os.unlink(out)  # Bench creates the file; mkstemp only reserved the name
     env = dict(os.environ,
-               SPARK_GRAFT_BENCHONE_PASSES=str(passes),
-               SPARK_GRAFT_BENCHONE_OUT=out)
-    cmd = ["sbt", "-batch", "runMain graft.BenchOne " + " ".join(queries)]
+               SPARK_GRAFT_BENCH_PASSES=str(passes),
+               SPARK_GRAFT_BENCH_OUT=out)
+    cmd = ["sbt", "-batch", "runMain graft.Bench " + " ".join(queries)]
     print(f"[confirm] isolating {len(queries)} queries x {passes} passes "
           f"(one warm JVM) ...", flush=True)
     r = subprocess.run(cmd, cwd=REPO, env=env,
                        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True)
     if r.returncode != 0 or not os.path.exists(out):
-        sys.exit(f"[confirm] BenchOne failed (rc={r.returncode}):\n"
+        sys.exit(f"[confirm] Bench failed (rc={r.returncode}):\n"
                  + "\n".join(r.stdout.splitlines()[-30:]))
     with open(out) as f:
         return {k: v["min"] for k, v in json.load(f)["queries"].items()}
@@ -214,7 +224,9 @@ def main(argv):
         print(f"{kind}: {len(rows)}")
         for e in rows:
             verdict = f" [{e['confirm_verdict']}]" if "confirm_verdict" in e else ""
-            print(f"  {e['query']}: {e['old_min']} -> {e['new_min']} s "
+            work = "".join(f", {k} {e['old_' + k]} -> {e['new_' + k]}"
+                           for k in WORK if "old_" + k in e)
+            print(f"  {e['query']}: {e['old_min']} -> {e['new_min']} s{work} "
                   f"(x{e['ratio']}, normalized x{e['normalized_ratio']}){verdict} "
                   f"passes {e['old_passes']} -> {e['new_passes']}")
     if do_confirm and result["confirm"].get("flags"):

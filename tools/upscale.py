@@ -4,9 +4,10 @@
 Usage: python3 tools/upscale.py <srcDir> <dstDir> [factor]
 
 Builds <dstDir> (default factor 10) from <srcDir> without touching the
-source. This is NOT a correctness oracle input — it exists so Bench /
-BenchOne can measure how query wall-time scales one decade past the
-largest driver-generated SF (the r12 verdict's sf1 probe). The copy
+source. This is NOT a correctness oracle input — it exists so
+graft.Bench (every entry, or only named ones) can measure how query
+wall-time scales one decade past the largest driver-generated SF (the
+r12 verdict's sf1 probe). The copy
 rules preserve the distributional properties the expensive operators
 are sensitive to, mirroring how the driver's generator scales:
 
